@@ -22,9 +22,25 @@ Execution strategy (designed for 100 TB, not just small SF):
   c(c+1)/2 pair list.  Maps are then assembled per group with
   ``collect_list`` (bounded by the category dictionary size, which the
   reference also assumes driver-resident, partition.cpp:34-37).
-* The three grouped results are joined on the (null-safe) group keys; all
-  three shuffles hash on the same keys, so AQE/exchange reuse keeps this to
-  co-partitioned joins.
+
+Physical paths, each picked from the input shape alone (all return the
+same values):
+
+* :func:`sum_to_triple` with no categorical column — the dense aggregate
+  alone, one codegen'd hash aggregation.
+* :func:`sum_to_triple`, narrow shape (fan-out × quads ≤
+  ``_FUSE_DENSE_MAX``) — the dense stats ride the sparse two-level
+  aggregation as one extra pseudo-entry: one scan, no join.
+* :func:`sum_to_triple`, wide shape — a dedicated dense aggregate joined
+  to the sparse one on the (null-safe) group keys: two scans, but the
+  quad products run once per row instead of once per exploded entry.
+* :func:`_sum_to_triple_collect` — one ``groupBy`` that collects each
+  group's rows and assembles the maps with higher-order functions.  Only
+  :func:`~.multiply.triple_over_join` uses it, for its per-join-key sides,
+  where groups are tiny and it saves two shuffles and a join.
+* :func:`sum_triples` — ⊕ over a column of triples: lower to flat entries,
+  one grouped sum, optional nested reassembly
+  (:func:`~.flatten.unflatten_triple`).
 
 Everything is JVM-side Column expressions — no Python UDF in the hot path.
 """
@@ -36,14 +52,14 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.triple import cat_pairs, n_quad
+from ..functions.triple import cat_pairs
 
 __all__ = ["sum_to_triple", "sum_to_triples_conditional", "sum_triples", "lift_columns"]
 
 _KV_T = "array<struct<key:int,value:double>>"
 _KKV_T = "array<struct<key1:int,key2:int,value:double>>"
 
-# Collect-strategy assembly gate (r14): groups with at most this many
+# Collect-path assembly gate (r14): groups with at most this many
 # collected rows build their categorical maps with the filter-per-key
 # form (cheap int compares, bounded <= rows² ops); larger groups take
 # the sort+fold form (O(rows log rows + keys)).  Both forms are
@@ -58,9 +74,12 @@ _COLLECT_FOLD_MIN_ROWS = 64
 # cofactor gates d(d+1)/2 quad products on each of the (fan + 1)
 # exploded entries per row, so its per-row overhead is ~fan × quads;
 # above this product the two-scan plan (dedicated dense aggregate +
-# broadcast join) wins.  Module-level so the A/B harness can flip it
-# without editing the operator; both branches are value-identical.
+# broadcast join) wins.  Both branches are value-identical.
 _FUSE_DENSE_MAX = 96
+
+
+def _empty(array_t: str) -> Column:
+    return F.expr("array()").cast(array_t)
 
 
 def _join_on(left: DataFrame, right: DataFrame, keys: Sequence[str]) -> DataFrame:
@@ -87,11 +106,77 @@ def _join_on(left: DataFrame, right: DataFrame, keys: Sequence[str]) -> DataFram
     return out.drop(*[f"__rhs_{k}" for k in keys])
 
 
-def _quad_pairs(num_cols: Sequence[str], nb: bool) -> list[tuple[int, int]]:
-    d = len(num_cols)
+def _quad_pairs(d: int, nb: bool) -> list[tuple[int, int]]:
+    """Storage order of the ``quad_agg`` slots: the upper triangle, or
+    the diagonal for the Naive-Bayes aggregate."""
     if nb:
         return [(i, i) for i in range(d)]
     return [(i, j) for i in range(d) for j in range(i, d)]
+
+
+def _project(
+    df: DataFrame, num_cols: list[str], cat_cols: list[str], group_by: list[str]
+) -> tuple[DataFrame, list[str], bool]:
+    """Validate the column roles and project the aggregation input: the
+    group keys (the constant ``__g`` when ungrouped), ``__x{i}`` as double
+    and ``__k{j}`` as int.  Returns ``(base, group_by, keyless)``."""
+    overlap = set(num_cols) & set(cat_cols)
+    if overlap:
+        raise ValueError(
+            f"columns cannot be both continuous and categorical: {sorted(overlap)}"
+        )
+    clash = (set(num_cols) | set(cat_cols)) & set(group_by)
+    if clash:
+        raise ValueError(f"group keys overlap aggregated columns: {sorted(clash)}")
+    keyless = not group_by
+    if keyless:
+        df = df.withColumn("__g", F.lit(0))
+        group_by = ["__g"]
+    nums = [F.col(col).cast("double").alias(f"__x{i}") for i, col in enumerate(num_cols)]
+    cats = [F.col(col).cast("int").alias(f"__k{j}") for j, col in enumerate(cat_cols)]
+    return df.select(*group_by, *nums, *cats), group_by, keyless
+
+
+def _dense_aggs(d: int, quad_idx: list[tuple[int, int]]) -> list[Column]:
+    """Count, Σx_i and Σx_i·x_j over the projected input, named ``__n``,
+    ``__lin_{i}`` and ``__quad_{p}``."""
+    aggs = [F.expr("count(1)").alias("__n")]
+    aggs += [F.expr(f"sum(__x{i})").alias(f"__lin_{i}") for i in range(d)]
+    aggs += [
+        F.expr(f"sum(__x{i} * __x{j})").alias(f"__quad_{p}")
+        for p, (i, j) in enumerate(quad_idx)
+    ]
+    return aggs
+
+
+def _dense_fields(
+    d: int,
+    n_quads: int,
+    n: str = "__n",
+    lin: str = "__lin_{}",
+    quad: str = "__quad_{}",
+) -> list[Column]:
+    """The ``N, lin_agg, quad_agg`` struct fields, read from the SQL
+    values ``n``, ``lin.format(i)`` and ``quad.format(p)`` (by default
+    the :func:`_dense_aggs` columns); NULL sums read as 0."""
+
+    def arr(vals: list[str]) -> Column:
+        if not vals:
+            return _empty("array<double>")
+        return F.expr("array(" + ", ".join(f"coalesce({v}, 0.0d)" for v in vals) + ")")
+
+    return [
+        F.expr(n).alias("N"),
+        arr([lin.format(i) for i in range(d)]).alias("lin_agg"),
+        arr([quad.format(p) for p in range(n_quads)]).alias("quad_agg"),
+    ]
+
+
+def _finish(
+    src: DataFrame, group_by: list[str], keyless: bool, fields: list[Column], result_col: str
+) -> DataFrame:
+    out = src.select(*group_by, F.struct(*fields).alias(result_col))
+    return out.drop("__g") if keyless else out
 
 
 def sum_to_triple(
@@ -101,7 +186,6 @@ def sum_to_triple(
     group_by: Sequence[str] = (),
     nb: bool = False,
     result_col: str = "triple",
-    strategy: str = "twolevel",
     max_categories: int | None = None,
 ) -> DataFrame:
     """Aggregate ``df`` into one triple per group.
@@ -120,17 +204,8 @@ def sum_to_triple(
     """
     num_cols = list(num_cols)
     cat_cols = list(cat_cols)
-    group_by = list(group_by)
     d, c = len(num_cols), len(cat_cols)
-
-    overlap = set(num_cols) & set(cat_cols)
-    if overlap:
-        raise ValueError(
-            f"columns cannot be both continuous and categorical: {sorted(overlap)}"
-        )
-    clash = (set(num_cols) | set(cat_cols)) & set(group_by)
-    if clash:
-        raise ValueError(f"group keys overlap aggregated columns: {sorted(clash)}")
+    base, group_by, keyless = _project(df, num_cols, cat_cols, list(group_by))
 
     if max_categories is not None and c > 0:
         # Opt-in scale guard: the categorical maps (and the driver-side
@@ -147,70 +222,21 @@ def sum_to_triple(
                 f"{bad} — these look like IDs, not categories"
             )
 
-    if strategy == "collect" and c > 0:
-        return _sum_to_triple_collect(
-            df, num_cols, cat_cols, group_by, nb=nb, result_col=result_col
-        )
-    if strategy == "pandas":
-        return _sum_to_triple_pandas(
-            df, num_cols, cat_cols, group_by, nb=nb, result_col=result_col
-        )
-    if strategy not in ("twolevel", "collect", "pandas"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-
-    internal_key = not group_by
-    if internal_key:
-        df = df.withColumn("__g", F.lit(0))
-        group_by = ["__g"]
-
-    nums = [F.col(col).cast("double").alias(f"__x{i}") for i, col in enumerate(num_cols)]
-    cats = [F.col(col).cast("int").alias(f"__k{j}") for j, col in enumerate(cat_cols)]
-    base = df.select(*group_by, *nums, *cats)
-
+    quad_idx = _quad_pairs(d, nb)
     if c == 0:
         # ---- dense-only: pure codegen'd partial+final hash aggregation ---
-        quad_idx = _quad_pairs(num_cols, nb)
-        dense_aggs = [F.expr("count(1)").alias("__n")]
-        dense_aggs += [F.expr(f"sum(__x{i})").alias(f"__lin_{i}") for i in range(d)]
-        dense_aggs += [
-            F.expr(f"sum(__x{i} * __x{j})").alias(f"__quad_{p}")
-            for p, (i, j) in enumerate(quad_idx)
-        ]
-        dense = base.groupBy(*group_by).agg(*dense_aggs)
-
-        lin_arr = (
-            F.expr(
-                "array(" + ", ".join(f"coalesce(__lin_{i}, 0.0d)" for i in range(d)) + ")"
-            )
-            if d
-            else F.expr("array()").cast("array<double>")
-        )
-        quad_arr = (
-            F.expr(
-                "array("
-                + ", ".join(f"coalesce(__quad_{p}, 0.0d)" for p in range(len(quad_idx)))
-                + ")"
-            )
-            if d
-            else F.expr("array()").cast("array<double>")
-        )
-        fields = [
-            F.col("__n").alias("N"),
-            lin_arr.alias("lin_agg"),
-            quad_arr.alias("quad_agg"),
-            F.expr("array()").cast(f"array<{_KV_T}>").alias("lin_cat"),
-        ]
+        fields = _dense_fields(d, len(quad_idx))
+        fields.append(_empty(f"array<{_KV_T}>").alias("lin_cat"))
         if not nb:
             fields += [
-                F.expr("array()").cast(f"array<{_KV_T}>").alias("quad_num_cat"),
-                F.expr("array()").cast(f"array<{_KKV_T}>").alias("quad_cat"),
+                _empty(f"array<{_KV_T}>").alias("quad_num_cat"),
+                _empty(f"array<{_KKV_T}>").alias("quad_cat"),
             ]
-        out = dense.select(*group_by, F.struct(*fields).alias(result_col))
-        return out.drop("__g") if internal_key else out
+        dense = base.groupBy(*group_by).agg(*_dense_aggs(d, quad_idx))
+        return _finish(dense, group_by, keyless, fields, result_col)
 
     # ---- sparse (+ optionally dense) two-level aggregation ---------------
     carry_sums = d > 0 and not nb
-    quad_idx = _quad_pairs(num_cols, nb)
     n_pairs = len(cat_pairs(c)) if not nb else 0
     fan = c + n_pairs  # sparse entries per input row
 
@@ -317,96 +343,40 @@ def sum_to_triple(
             f"x.__e2, 'value', CAST(x.__cnt AS DOUBLE))))"
         )
 
-    lin_cat = F.expr(
-        "array(" + ", ".join(_single(j, "__cnt", cast=True) for j in range(c)) + ")"
-    )
-    quad_num_cat = (
+    cat_fields = [
         F.expr(
-            "array("
-            + ", ".join(_single(j, f"__s{i}") for i in range(d) for j in range(c))
-            + ")"
-        )
-        if carry_sums
-        else F.expr("array()").cast(f"array<{_KV_T}>")
-    )
-    quad_cat = (
-        F.expr(
-            "array(" + ", ".join(_pair(p) for p in range(len(cat_pairs(c)))) + ")"
-        )
-        if not nb
-        else None
-    )
+            "array(" + ", ".join(_single(j, "__cnt", cast=True) for j in range(c)) + ")"
+        ).alias("lin_cat")
+    ]
+    if not nb:
+        cat_fields += [
+            (
+                F.expr(
+                    "array("
+                    + ", ".join(_single(j, f"__s{i}") for i in range(d) for j in range(c))
+                    + ")"
+                )
+                if carry_sums
+                else _empty(f"array<{_KV_T}>")
+            ).alias("quad_num_cat"),
+            F.expr(
+                "array(" + ", ".join(_pair(p) for p in range(len(cat_pairs(c)))) + ")"
+            ).alias("quad_cat"),
+        ]
 
     if fuse_dense:
         _dense_e = "element_at(filter(__entries, x -> x.__kind = 2), 1)"
-        lin_arr = (
-            F.expr(
-                "array("
-                + ", ".join(f"coalesce({_dense_e}.__s{i}, 0.0d)" for i in range(d))
-                + ")"
-            )
-            if d
-            else F.expr("array()").cast("array<double>")
+        fields = _dense_fields(
+            d, len(quad_idx), f"{_dense_e}.__cnt", f"{_dense_e}.__s{{}}", f"{_dense_e}.__q{{}}"
         )
-        quad_arr = (
-            F.expr(
-                "array("
-                + ", ".join(
-                    f"coalesce({_dense_e}.__q{p}, 0.0d)"
-                    for p in range(len(quad_idx))
-                )
-                + ")"
-            )
-            if d
-            else F.expr("array()").cast("array<double>")
-        )
-        fields = [
-            F.expr(f"{_dense_e}.__cnt").alias("N"),
-            lin_arr.alias("lin_agg"),
-            quad_arr.alias("quad_agg"),
-            lin_cat.alias("lin_cat"),
-        ]
-        if not nb:
-            fields += [quad_num_cat.alias("quad_num_cat"), quad_cat.alias("quad_cat")]
-        out = entries.select(*group_by, F.struct(*fields).alias(result_col))
-        return out.drop("__g") if internal_key else out
+        return _finish(entries, group_by, keyless, fields + cat_fields, result_col)
 
     # wide shape: dedicated dense aggregate (second scan) + join — the
     # quad products run once per input row with no per-entry gating
-    dense_aggs = [F.expr("count(1)").alias("__n")]
-    dense_aggs += [F.expr(f"sum(__x{i})").alias(f"__lin_{i}") for i in range(d)]
-    dense_aggs += [
-        F.expr(f"sum(__x{i} * __x{j})").alias(f"__quad_{p}")
-        for p, (i, j) in enumerate(quad_idx)
-    ]
-    dense = base.groupBy(*group_by).agg(*dense_aggs)
-    lin_arr = (
-        F.expr(
-            "array(" + ", ".join(f"coalesce(__lin_{i}, 0.0d)" for i in range(d)) + ")"
-        )
-        if d
-        else F.expr("array()").cast("array<double>")
-    )
-    quad_arr = (
-        F.expr(
-            "array("
-            + ", ".join(f"coalesce(__quad_{p}, 0.0d)" for p in range(len(quad_idx)))
-            + ")"
-        )
-        if d
-        else F.expr("array()").cast("array<double>")
-    )
+    dense = base.groupBy(*group_by).agg(*_dense_aggs(d, quad_idx))
     merged = _join_on(dense, entries, group_by)
-    fields = [
-        F.col("__n").alias("N"),
-        lin_arr.alias("lin_agg"),
-        quad_arr.alias("quad_agg"),
-        lin_cat.alias("lin_cat"),
-    ]
-    if not nb:
-        fields += [quad_num_cat.alias("quad_num_cat"), quad_cat.alias("quad_cat")]
-    out = merged.select(*group_by, F.struct(*fields).alias(result_col))
-    return out.drop("__g") if internal_key else out
+    fields = _dense_fields(d, len(quad_idx))
+    return _finish(merged, group_by, keyless, fields + cat_fields, result_col)
 
 
 def lift_columns(
@@ -422,9 +392,6 @@ def lift_columns(
     d, c = len(num_cols), len(cat_cols)
     xs = [F.col(col).cast("double") for col in num_cols]
     ks = [F.col(col).cast("int") for col in cat_cols]
-    quad_pairs = [(i, i) for i in range(d)] if nb else [
-        (i, j) for i in range(d) for j in range(i, d)
-    ]
     one = F.lit(1.0)
 
     def kv(k: Column, v: Column) -> Column:
@@ -433,13 +400,13 @@ def lift_columns(
     fields = [
         F.lit(1).cast("long").alias("N"),
         F.array(*xs).cast("array<double>").alias("lin_agg"),
-        F.array(*[xs[i] * xs[j] for (i, j) in quad_pairs])
+        F.array(*[xs[i] * xs[j] for (i, j) in _quad_pairs(d, nb)])
         .cast("array<double>")
         .alias("quad_agg"),
         (
             F.array(*[kv(ks[j], one) for j in range(c)])
             if c
-            else F.expr("array()").cast(f"array<{_KV_T}>")
+            else _empty(f"array<{_KV_T}>")
         ).alias("lin_cat"),
     ]
     if not nb:
@@ -447,7 +414,7 @@ def lift_columns(
             (
                 F.array(*[kv(ks[j], xs[i]) for i in range(d) for j in range(c)])
                 if c and d
-                else F.expr("array()").cast(f"array<{_KV_T}>")
+                else _empty(f"array<{_KV_T}>")
             ).alias("quad_num_cat"),
             (
                 F.array(
@@ -463,7 +430,7 @@ def lift_columns(
                     ]
                 )
                 if c
-                else F.expr("array()").cast(f"array<{_KKV_T}>")
+                else _empty(f"array<{_KKV_T}>")
             ).alias("quad_cat"),
         ]
     return F.struct(*fields)
@@ -487,7 +454,8 @@ def sum_triples(
     version re-ran the whole upstream join per statistic family), summed
     with one grouped aggregation (map-side combine bounds the shuffle by
     the number of distinct statistics, not input rows), and reassembled
-    into the nested struct with one more grouping.
+    into the nested struct with one more grouping
+    (:func:`~.flatten.unflatten_triple`).
 
     ``flat_entries=True`` (r14, guide §1.2 — don't compute things you
     throw away) returns the summed FLAT entry rows directly
@@ -503,104 +471,30 @@ def sum_triples(
     the plan drops one single-row exchange, two ObjectHashAggregates
     (collect_list) and the two widest projections.
     """
-    from .flatten import flatten_triple  # local import to avoid a cycle
+    from .flatten import flatten_triple, unflatten_triple  # avoid a cycle
 
     group_by = list(group_by)
     internal_key = not group_by
     if internal_key:
         df = df.withColumn("__g", F.lit(0))
         group_by = ["__g"]
-    d, c = d_num, d_cat
 
-    entries = flatten_triple(df, d, c, group_by, nb=nb, triple_col=triple_col)
+    entries = flatten_triple(df, d_num, d_cat, group_by, nb=nb, triple_col=triple_col)
     summed = entries.groupBy(*group_by, "part", "i", "j", "k1", "k2").agg(
         F.sum("val").alias("val")
     )
-    if flat_entries:
-        return summed.drop("__g") if internal_key else summed
-    assembled = summed.groupBy(*group_by).agg(
-        F.collect_list(F.struct("part", "i", "j", "k1", "k2", "val")).alias("__e")
-    )
-
-    # reassembly generated as SQL text (single parse, no per-expression
-    # py4j round trips)
-    def match(part: str, i: int, j: int) -> str:
-        return f"filter(__e, x -> x.part = '{part}' AND x.i = {i} AND x.j = {j})"
-
-    def scalar(part: str, i: int, j: int) -> str:
-        return f"element_at({match(part, i, j)}, 1).val"
-
-    def kv_list(part: str, i: int, j: int) -> str:
-        return (
-            f"sort_array(transform({match(part, i, j)}, "
-            f"x -> named_struct('key', x.k1, 'value', x.val)))"
+    if not flat_entries:
+        summed = unflatten_triple(
+            summed, d_num, d_cat, group_by, nb=nb, result_col=result_col
         )
-
-    def kkv_list(i: int, j: int) -> str:
-        return (
-            f"sort_array(transform({match('quad_cat', i, j)}, "
-            f"x -> named_struct('key1', x.k1, 'key2', x.k2, 'value', x.val)))"
-        )
-
-    quad_pairs = [(i, i) for i in range(d)] if nb else [
-        (i, j) for i in range(d) for j in range(i, d)
-    ]
-    fields = [
-        F.expr(f"CAST({scalar('N', -1, -1)} AS BIGINT)").alias("N"),
-        (
-            F.expr("array(" + ", ".join(scalar("lin", i, -1) for i in range(d)) + ")")
-            if d
-            else F.expr("array()").cast("array<double>")
-        ).alias("lin_agg"),
-        (
-            F.expr(
-                "array("
-                + ", ".join(scalar("quad", i, j) for (i, j) in quad_pairs)
-                + ")"
-            )
-            if d
-            else F.expr("array()").cast("array<double>")
-        ).alias("quad_agg"),
-        (
-            F.expr(
-                "array(" + ", ".join(kv_list("lin_cat", j, -1) for j in range(c)) + ")"
-            )
-            if c
-            else F.expr("array()").cast(f"array<{_KV_T}>")
-        ).alias("lin_cat"),
-    ]
-    if not nb:
-        fields += [
-            (
-                F.expr(
-                    "array("
-                    + ", ".join(
-                        kv_list("quad_num_cat", i, j)
-                        for i in range(d)
-                        for j in range(c)
-                    )
-                    + ")"
-                )
-                if c and d
-                else F.expr("array()").cast(f"array<{_KV_T}>")
-            ).alias("quad_num_cat"),
-            (
-                F.expr(
-                    "array(" + ", ".join(kkv_list(a, b) for (a, b) in cat_pairs(c)) + ")"
-                )
-                if c
-                else F.expr("array()").cast(f"array<{_KKV_T}>")
-            ).alias("quad_cat"),
-        ]
-    out = assembled.select(*group_by, F.struct(*fields).alias(result_col))
-    return out.drop("__g") if internal_key else out
+    return summed.drop("__g") if internal_key else summed
 
 
 def _sum_to_triple_collect(
     df: DataFrame,
-    num_cols: list[str],
-    cat_cols: list[str],
-    group_by: list[str],
+    num_cols: Sequence[str],
+    cat_cols: Sequence[str],
+    group_by: Sequence[str] = (),
     nb: bool = False,
     result_col: str = "triple",
 ) -> DataFrame:
@@ -615,25 +509,22 @@ def _sum_to_triple_collect(
     sort+fold at runtime (a lazy size gate — see the inline note), so a
     group with many rows AND many distinct keys can no longer go
     quadratic.  The whole group's rows must still fit one aggregation
-    buffer, so the default two-level strategy remains the choice for
-    large groups — it stays map-side-combine-bounded.
-    """
-    d, c = len(num_cols), len(cat_cols)
-    internal_key = not group_by
-    if internal_key:
-        df = df.withColumn("__g", F.lit(0))
-        group_by = ["__g"]
-    nums = [F.col(x).cast("double").alias(f"__x{i}") for i, x in enumerate(num_cols)]
-    cats = [F.col(x).cast("int").alias(f"__k{j}") for j, x in enumerate(cat_cols)]
-    base = df.select(*group_by, *nums, *cats)
+    buffer, so :func:`sum_to_triple`'s two-level path remains the choice
+    for large groups — it stays map-side-combine-bounded.
 
-    quad_idx = _quad_pairs(num_cols, nb)
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    aggs += [F.sum(F.col(f"__x{i}")).alias(f"__lin_{i}") for i in range(d)]
-    aggs += [
-        F.sum(F.col(f"__x{i}") * F.col(f"__x{j}")).alias(f"__quad_{p}")
-        for p, (i, j) in enumerate(quad_idx)
-    ]
+    Agrees with :func:`sum_to_triple` entry for entry, with two
+    differences in the nested arrays: a NULL categorical key sorts LAST
+    in each map here and FIRST in the two-level path, and float sums
+    over non-integer values may differ in the last bits (a different
+    accumulation order).  The flat entry rows (``flatten_triple``) are
+    equal as a set on integer-valued data, NULL keys included.
+    """
+    num_cols, cat_cols = list(num_cols), list(cat_cols)
+    d, c = len(num_cols), len(cat_cols)
+    base, group_by, keyless = _project(df, num_cols, cat_cols, list(group_by))
+
+    quad_idx = _quad_pairs(d, nb)
+    aggs = _dense_aggs(d, quad_idx)
     aggs.append(
         F.collect_list(
             F.struct(
@@ -799,27 +690,12 @@ def _sum_to_triple_collect(
         )
         return _hybrid(_kkv_filter(a, b), fold)
 
-    fields = [
-        F.col("__n").alias("N"),
-        (
-            F.array(*[F.coalesce(F.col(f"__lin_{i}"), F.lit(0.0)) for i in range(d)])
-            if d
-            else F.expr("array()").cast("array<double>")
-        ).alias("lin_agg"),
-        (
-            F.array(
-                *[
-                    F.coalesce(F.col(f"__quad_{p}"), F.lit(0.0))
-                    for p in range(len(quad_idx))
-                ]
-            )
-            if d
-            else F.expr("array()").cast("array<double>")
-        ).alias("quad_agg"),
+    fields = _dense_fields(d, len(quad_idx))
+    fields.append(
         F.expr("array(" + ", ".join(kv_count(j) for j in range(c)) + ")").alias(
             "lin_cat"
-        ),
-    ]
+        )
+    )
     if not nb:
         fields += [
             (
@@ -829,112 +705,13 @@ def _sum_to_triple_collect(
                     + ")"
                 )
                 if d
-                else F.expr("array()").cast(f"array<{_KV_T}>")
+                else _empty(f"array<{_KV_T}>")
             ).alias("quad_num_cat"),
             F.expr(
                 "array(" + ", ".join(kkv(a, b) for (a, b) in cat_pairs(c)) + ")"
             ).alias("quad_cat"),
         ]
-    out = g.select(*group_by, F.struct(*fields).alias(result_col))
-    return out.drop("__g") if internal_key else out
-
-
-def _sum_to_triple_pandas(
-    df: DataFrame,
-    num_cols: list[str],
-    cat_cols: list[str],
-    group_by: list[str],
-    nb: bool = False,
-    result_col: str = "triple",
-) -> DataFrame:
-    """Arrow ``applyInPandas`` fallback: one NumPy-computed triple per
-    group.  This is the documented slow path for semantics the built-in
-    operators can't express — kept as a third strategy so the declarative
-    paths always have an independent implementation to diff against.
-    Groups are pulled into Python whole, so use it only when every group
-    fits in executor memory; NULL categorical keys are not supported here
-    (the JVM strategies carry them)."""
-    from collections import Counter
-
-    import numpy as np
-    import pandas as pd  # noqa: F401
-    from pyspark.sql.types import StructField, StructType
-
-    from ..functions.triple import nb_schema, triple_schema
-
-    d, c = len(num_cols), len(cat_cols)
-    internal_key = not group_by
-    if internal_key:
-        df = df.withColumn("__g", F.lit(0))
-        group_by = ["__g"]
-    base = df.select(
-        *group_by,
-        *[F.col(x).cast("double").alias(f"__x{i}") for i, x in enumerate(num_cols)],
-        *[F.col(x).cast("int").alias(f"__k{j}") for j, x in enumerate(cat_cols)],
-    )
-    group_fields = [base.schema[g] for g in group_by]
-    t_schema = nb_schema() if nb else triple_schema()
-    out_schema = StructType(group_fields + [StructField(result_col, t_schema)])
-    pairs = cat_pairs(c)
-
-    def fn(pdf):
-        n = len(pdf)
-        X = pdf[[f"__x{i}" for i in range(d)]].to_numpy(dtype=float) if d else None
-        lin = X.sum(axis=0) if d else []
-        if d:
-            if nb:
-                quad = (X * X).sum(axis=0)
-            else:
-                G = X.T @ X
-                quad = [G[i, j] for i in range(d) for j in range(i, d)]
-        else:
-            quad = []
-        K = (
-            pdf[[f"__k{j}" for j in range(c)]].to_numpy(dtype="int64")
-            if c
-            else None
-        )
-        lin_cat = []
-        for j in range(c):
-            cnt = Counter(K[:, j].tolist())
-            lin_cat.append(
-                [{"key": int(k), "value": float(v)} for k, v in sorted(cnt.items())]
-            )
-        triple = {
-            "N": int(n),
-            "lin_agg": [float(v) for v in lin],
-            "quad_agg": [float(v) for v in quad],
-            "lin_cat": lin_cat,
-        }
-        if not nb:
-            qnc = []
-            for i in range(d):
-                for j in range(c):
-                    sums: dict = {}
-                    for key, x in zip(K[:, j].tolist(), X[:, i].tolist()):
-                        sums[key] = sums.get(key, 0.0) + x
-                    qnc.append(
-                        [{"key": int(k), "value": float(v)} for k, v in sorted(sums.items())]
-                    )
-            qcc = []
-            for a, b in pairs:
-                cnt = Counter(zip(K[:, a].tolist(), K[:, b].tolist()))
-                qcc.append(
-                    [
-                        {"key1": int(k1), "key2": int(k2), "value": float(v)}
-                        for (k1, k2), v in sorted(cnt.items())
-                    ]
-                )
-            triple["quad_num_cat"] = qnc
-            triple["quad_cat"] = qcc
-        out = {g: [pdf[g].iloc[0]] for g in group_by}
-        out[result_col] = [triple]
-        import pandas as _pd
-
-        return _pd.DataFrame(out)
-
-    out = base.groupBy(*group_by).applyInPandas(fn, schema=out_schema)
-    return out.drop("__g") if internal_key else out
+    return _finish(g, group_by, keyless, fields, result_col)
 
 
 def sum_to_triples_conditional(

@@ -28,12 +28,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.triple import cat_pairs
-from .cofactor import sum_to_triple
+from .cofactor import _KKV_T, _KV_T, _empty, _quad_pairs, sum_to_triple
 
-__all__ = ["triple_entries", "triple_entries_sql", "flatten_triple"]
+__all__ = ["triple_entries", "triple_entries_sql", "flatten_triple", "unflatten_triple"]
 
 
 def _entry(part: str, i: int, j: int, k1: Column, k2: Column, val: Column) -> Column:
+    """One flat statistic entry struct — field for field the layout
+    :func:`flatten_triple` emits."""
     return F.struct(
         F.lit(part).alias("part"),
         F.lit(i).cast("int").alias("i"),
@@ -88,10 +90,7 @@ def flatten_triple(
         arrays.append(
             f"array({ent('lin', i, -1, '-1', '-1', f'{tc}.lin_agg[{i}]')})"
         )
-    quad_pairs = [(i, i) for i in range(d)] if nb else [
-        (i, j) for i in range(d) for j in range(i, d)
-    ]
-    for p, (i, j) in enumerate(quad_pairs):
+    for p, (i, j) in enumerate(_quad_pairs(d, nb)):
         arrays.append(
             f"array({ent('quad', i, j, '-1', '-1', f'{tc}.quad_agg[{p}]')})"
         )
@@ -117,6 +116,80 @@ def flatten_triple(
             )
     entries_sql = "concat(" + ", ".join(arrays) + ")" if len(arrays) > 1 else arrays[0]
     return t.select(*group_by, F.inline(F.expr(entries_sql)))
+
+
+def unflatten_triple(
+    entries: DataFrame,
+    d: int,
+    c: int,
+    group_by: Sequence[str] = (),
+    nb: bool = False,
+    result_col: str = "triple",
+) -> DataFrame:
+    """Inverse of :func:`flatten_triple`: summed entry rows (at most one
+    per ``(group, part, i, j, k1, k2)``) → one nested triple per group.
+
+    One ``collect_list`` per group, then every struct slot picks its
+    entries by ``(part, i, j)``; maps come out key-sorted.  ``N`` makes
+    an exact double→bigint round trip (counts are integral and ≪ 2^53).
+    Ungrouped input gets one triple, or no row at all when empty.
+    """
+    group_by = list(group_by)
+    keyless = not group_by
+    if keyless:
+        entries = entries.withColumn("__g", F.lit(0))
+        group_by = ["__g"]
+    assembled = entries.groupBy(*group_by).agg(
+        F.collect_list(F.struct("part", "i", "j", "k1", "k2", "val")).alias("__e")
+    )
+
+    # reassembly generated as SQL text (single parse, no per-expression
+    # py4j round trips)
+    def match(part: str, i: int, j: int) -> str:
+        return f"filter(__e, x -> x.part = '{part}' AND x.i = {i} AND x.j = {j})"
+
+    def scalar(part: str, i: int, j: int) -> str:
+        return f"element_at({match(part, i, j)}, 1).val"
+
+    def kv_list(part: str, i: int, j: int) -> str:
+        return (
+            f"sort_array(transform({match(part, i, j)}, "
+            f"x -> named_struct('key', x.k1, 'value', x.val)))"
+        )
+
+    def kkv_list(i: int, j: int) -> str:
+        return (
+            f"sort_array(transform({match('quad_cat', i, j)}, "
+            f"x -> named_struct('key1', x.k1, 'key2', x.k2, 'value', x.val)))"
+        )
+
+    def array(items: list[str], empty_t: str) -> Column:
+        return F.expr("array(" + ", ".join(items) + ")") if items else _empty(empty_t)
+
+    fields = [
+        F.expr(f"CAST({scalar('N', -1, -1)} AS BIGINT)").alias("N"),
+        array([scalar("lin", i, -1) for i in range(d)], "array<double>").alias(
+            "lin_agg"
+        ),
+        array(
+            [scalar("quad", i, j) for (i, j) in _quad_pairs(d, nb)], "array<double>"
+        ).alias("quad_agg"),
+        array([kv_list("lin_cat", j, -1) for j in range(c)], f"array<{_KV_T}>").alias(
+            "lin_cat"
+        ),
+    ]
+    if not nb:
+        fields += [
+            array(
+                [kv_list("quad_num_cat", i, j) for i in range(d) for j in range(c)],
+                f"array<{_KV_T}>",
+            ).alias("quad_num_cat"),
+            array(
+                [kkv_list(a, b) for (a, b) in cat_pairs(c)], f"array<{_KKV_T}>"
+            ).alias("quad_cat"),
+        ]
+    out = assembled.select(*group_by, F.struct(*fields).alias(result_col))
+    return out.drop("__g") if keyless else out
 
 
 def triple_entries_sql(
@@ -148,10 +221,7 @@ def triple_entries_sql(
     parts = [q("N", -1, -1, "-1", "-1", "COUNT(*)")]
     for i in range(d):
         parts.append(q("lin", i, -1, "-1", "-1", f"SUM({num_exprs[i]})"))
-    quad_pairs = [(i, i) for i in range(d)] if nb else [
-        (i, j) for i in range(d) for j in range(i, d)
-    ]
-    for i, j in quad_pairs:
+    for i, j in _quad_pairs(d, nb):
         parts.append(
             q("quad", i, j, "-1", "-1", f"SUM(({num_exprs[i]}) * ({num_exprs[j]}))")
         )

@@ -13,69 +13,169 @@ Catalyst does not rewrite agg-over-join into partial-agg ⊗ on its own
   product triple spans the concatenated column spaces, with
   N = N₁N₂, lin = lin₁·N₂ ∥ lin₂·N₁, quad cross-blocks lin₁ᵢ·lin₂ⱼ, cat
   maps scaled by the other side's N, and the cat×cat cross block a full
-  key cross product (mul.cpp:564-580).
+  key cross product (mul.cpp:564-580).  It backs the registry's
+  ``multiply_triple`` and any per-key product a caller wants to keep.
+* :func:`multiply_flatten_entries` — the same product as the flat entry
+  rows :func:`~.flatten.flatten_triple` would emit from it, without ever
+  building the nested struct.  This is the form a ⊕ consumes.
 * :func:`triple_over_join` — the end-to-end factorized pattern: group each
   side by the join key, aggregate *locally* to one triple per key, join
   the (tiny) grouped results, ⊗, then ⊕.  At 100 TB this is the whole
   point: the join operates on |distinct keys| rows instead of the raw
   fact tables, and each side's heavy aggregation shuffles only once on
-  its own key.
+  its own key.  It has one physical path: the flat ⊗, one grouped sum,
+  and — for nested output — :func:`~.flatten.unflatten_triple`.
+
+Both ⊗ emitters walk one slot table (:func:`_product_slots`), so the
+product's block layout and index arithmetic are written once.
 """
 
 from __future__ import annotations
 
 import os
-from typing import Sequence
+from typing import Callable, NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.triple import cat_pairs, n_quad, pair_index
-from .cofactor import lift_columns, sum_to_triple, sum_triples
+from ..functions.triple import cat_pairs, pair_index
+from .cofactor import (
+    _KKV_T,
+    _KV_T,
+    _empty,
+    _quad_pairs,
+    _sum_to_triple_collect,
+    lift_columns,
+    sum_to_triple,
+)
+from .flatten import _entry, unflatten_triple
 
 __all__ = ["multiply_triples", "multiply_flatten_entries", "triple_over_join"]
 
 
-def _scale_kv(arr: Column, factor: Column) -> Column:
-    return F.transform(
-        arr,
-        lambda e: F.struct(
-            e["key"].alias("key"), (e["value"] * factor).alias("value")
-        ),
-    )
+class _Slot(NamedTuple):
+    """One output slot of A ⊗ B (after ``N``).
+
+    ``part``/``i``/``j`` locate it as :func:`~.flatten.flatten_triple`
+    does.  It reads operand ``side``'s ``field`` at 0-based ``pos`` and
+    multiplies by the OTHER operand's ``scale``: its ``N``, its
+    ``lin_agg`` at ``scale_pos``, or — for ``lin_cat`` — the full key
+    cross product with its ``lin_cat`` map at ``scale_pos``."""
+
+    part: str
+    i: int
+    j: int
+    side: str
+    field: str
+    pos: int
+    scale: str
+    scale_pos: int = -1
+
+    @property
+    def scalar(self) -> bool:
+        return self.field in ("lin_agg", "quad_agg")
 
 
-def _scale_kkv(arr: Column, factor: Column) -> Column:
-    return F.transform(
-        arr,
-        lambda e: F.struct(
-            e["key1"].alias("key1"),
-            e["key2"].alias("key2"),
-            (e["value"] * factor).alias("value"),
-        ),
-    )
+def _product_slots(
+    shape_left: tuple[int, int], shape_right: tuple[int, int], nb: bool
+) -> list[_Slot]:
+    """Every slot of the product of a ``shape_left`` and a
+    ``shape_right`` triple (``(d_num, d_cat)`` each), in the emission
+    order of :func:`~.flatten.flatten_triple`.  A block that lies wholly
+    on one side is that side's block scaled by the other side's ``N``;
+    the mixed blocks are the cross products of mul.cpp:564-580."""
+    d1, c1 = shape_left
+    d2, c2 = shape_right
+    d, c = d1 + d2, c1 + c2
+    slots = []
+    for i in range(d):
+        s = ("a", "lin_agg", i, "N") if i < d1 else ("b", "lin_agg", i - d1, "N")
+        slots.append(_Slot("lin", i, -1, *s))
+    for i, j in _quad_pairs(d, nb):
+        if nb:
+            # nb quad slots are the diagonal in storage order (slot p =
+            # pair (p, p)); sides scale like lin
+            s = ("a", "quad_agg", i, "N") if i < d1 else ("b", "quad_agg", i - d1, "N")
+        elif j < d1:
+            s = ("a", "quad_agg", pair_index(i, j, d1), "N")
+        elif i >= d1:
+            s = ("b", "quad_agg", pair_index(i - d1, j - d1, d2), "N")
+        else:  # num from A × num from B
+            s = ("a", "lin_agg", i, "lin_agg", j - d1)
+        slots.append(_Slot("quad", i, j, *s))
+    for j in range(c):
+        s = ("a", "lin_cat", j, "N") if j < c1 else ("b", "lin_cat", j - c1, "N")
+        slots.append(_Slot("lin_cat", j, -1, *s))
+    if nb:
+        return slots
+    for i in range(d):
+        for j in range(c):
+            if i < d1 and j < c1:
+                s = ("a", "quad_num_cat", i * c1 + j, "N")
+            elif i >= d1 and j >= c1:
+                s = ("b", "quad_num_cat", (i - d1) * c2 + (j - c1), "N")
+            elif i < d1:  # num from A × cat from B
+                s = ("b", "lin_cat", j - c1, "lin_agg", i)
+            else:  # num from B × cat from A
+                s = ("a", "lin_cat", j, "lin_agg", i - d1)
+            slots.append(_Slot("quad_num_cat", i, j, *s))
+    for x, y in cat_pairs(c):
+        if y < c1:
+            s = ("a", "quad_cat", pair_index(x, y, c1), "N")
+        elif x >= c1:
+            s = ("b", "quad_cat", pair_index(x - c1, y - c1, c2), "N")
+        else:  # cat from A × cat from B
+            s = ("a", "lin_cat", x, "lin_cat", y - c1)
+        slots.append(_Slot("quad_cat", x, y, *s))
+    return slots
 
 
-def _kv_times_scalar(arr: Column, scalar: Column) -> Column:
-    """{key -> v} * x  →  {key -> v*x} (num×cat cross block)."""
-    return _scale_kv(arr, scalar)
-
-
-def _kv_cross(arr_a: Column, arr_b: Column) -> Column:
-    """Full key cross product {k1 -> v1} ⊗ {k2 -> v2} → {(k1,k2) -> v1*v2}."""
-    return F.flatten(
-        F.transform(
-            arr_a,
-            lambda x: F.transform(
-                arr_b,
-                lambda y: F.struct(
-                    x["key"].alias("key1"),
-                    y["key"].alias("key2"),
-                    (x["value"] * y["value"]).alias("value"),
-                ),
-            ),
+def _slot_value(
+    s: _Slot, a: Column, b: Column, entry: Callable[[Column, Column, Column], Column]
+) -> Column:
+    """The product expression of slot ``s``: a scalar for scalar slots,
+    else an array.  ``entry(k1, k2, val)`` builds one output value
+    (``k1``/``k2`` are None where the slot has no such key)."""
+    src_t, other = (a, b) if s.side == "a" else (b, a)
+    src = F.element_at(src_t[s.field], s.pos + 1)
+    if s.scale == "lin_cat":
+        # full key cross product; the sort makes the within-slot order
+        # canonical (the entry prefix is constant, so ordering by the
+        # whole element orders by (key1, key2))
+        return F.sort_array(
+            F.flatten(
+                F.transform(
+                    src,
+                    lambda e1: F.transform(
+                        F.element_at(other["lin_cat"], s.scale_pos + 1),
+                        lambda e2: entry(
+                            e1["key"], e2["key"], e1["value"] * e2["value"]
+                        ),
+                    ),
+                )
+            )
         )
-    )
+    if s.scale == "N":
+        factor = other["N"].cast("double")
+    else:
+        factor = F.element_at(other["lin_agg"], s.scale_pos + 1)
+    if s.scalar:
+        return entry(None, None, src * factor)
+    if s.field == "quad_cat":
+        return F.transform(
+            src, lambda e: entry(e["key1"], e["key2"], e["value"] * factor)
+        )
+    return F.transform(src, lambda e: entry(e["key"], None, e["value"] * factor))
+
+
+def _nested_entry(part: str) -> Callable[[Column, Column, Column], Column]:
+    if part == "quad_cat":
+        return lambda k1, k2, v: F.struct(
+            k1.alias("key1"), k2.alias("key2"), v.alias("value")
+        )
+    if part in ("lin_cat", "quad_num_cat"):
+        return lambda k1, k2, v: F.struct(k1.alias("key"), v.alias("value"))
+    return lambda k1, k2, v: v
 
 
 def multiply_triples(
@@ -91,145 +191,27 @@ def multiply_triples(
     the output struct), mirroring the reference's bind-time return-type
     computation (mul.cpp:614-650).
     """
-    d1, c1 = shape_left
-    d2, c2 = shape_right
-    d, c = d1 + d2, c1 + c2
-    a, b = left, right
-    na = a["N"].cast("double")
-    nb_ = b["N"].cast("double")
+    parts: dict[str, list[Column]] = {
+        p: [] for p in ("lin", "quad", "lin_cat", "quad_num_cat", "quad_cat")
+    }
+    for s in _product_slots(shape_left, shape_right, nb):
+        parts[s.part].append(_slot_value(s, left, right, _nested_entry(s.part)))
 
-    def a_lin(i: int) -> Column:
-        return F.element_at(a["lin_agg"], i + 1)
-
-    def b_lin(i: int) -> Column:
-        return F.element_at(b["lin_agg"], i + 1)
-
-    lin = F.concat(
-        F.transform(a["lin_agg"], lambda x: x * nb_),
-        F.transform(b["lin_agg"], lambda x: x * na),
-    )
-
-    if nb:
-        quad = F.concat(
-            F.transform(a["quad_agg"], lambda x: x * nb_),
-            F.transform(b["quad_agg"], lambda x: x * na),
-        )
-    else:
-        quad_items = []
-        for i in range(d):
-            for j in range(i, d):
-                if j < d1:
-                    quad_items.append(
-                        F.element_at(a["quad_agg"], pair_index(i, j, d1) + 1) * nb_
-                    )
-                elif i >= d1:
-                    quad_items.append(
-                        F.element_at(b["quad_agg"], pair_index(i - d1, j - d1, d2) + 1)
-                        * na
-                    )
-                else:
-                    quad_items.append(a_lin(i) * b_lin(j - d1))
-        quad = (
-            F.array(*quad_items)
-            if quad_items
-            else F.expr("array()").cast("array<double>")
-        )
-
-    lin_cat_items = [
-        _scale_kv(F.element_at(a["lin_cat"], j + 1), nb_) for j in range(c1)
-    ] + [_scale_kv(F.element_at(b["lin_cat"], j + 1), na) for j in range(c2)]
-    lin_cat = (
-        F.array(*lin_cat_items)
-        if lin_cat_items
-        else F.expr("array()").cast("array<array<struct<key:int,value:double>>>")
-    )
+    def arr(part: str, array_t: str) -> Column:
+        return F.array(*parts[part]) if parts[part] else _empty(array_t)
 
     fields = [
-        (a["N"] * b["N"]).alias("N"),
-        lin.alias("lin_agg"),
-        quad.alias("quad_agg"),
-        lin_cat.alias("lin_cat"),
+        (left["N"] * right["N"]).alias("N"),
+        arr("lin", "array<double>").alias("lin_agg"),
+        arr("quad", "array<double>").alias("quad_agg"),
+        arr("lin_cat", f"array<{_KV_T}>").alias("lin_cat"),
     ]
-    if nb:
-        return F.struct(*fields)
-
-    qnc_items = []
-    for i in range(d):
-        for j in range(c):
-            if i < d1 and j < c1:
-                qnc_items.append(
-                    _scale_kv(F.element_at(a["quad_num_cat"], i * c1 + j + 1), nb_)
-                )
-            elif i >= d1 and j >= c1:
-                qnc_items.append(
-                    _scale_kv(
-                        F.element_at(
-                            b["quad_num_cat"], (i - d1) * c2 + (j - c1) + 1
-                        ),
-                        na,
-                    )
-                )
-            elif i < d1:  # num from A × cat from B
-                qnc_items.append(
-                    _kv_times_scalar(F.element_at(b["lin_cat"], j - c1 + 1), a_lin(i))
-                )
-            else:  # num from B × cat from A
-                qnc_items.append(
-                    _kv_times_scalar(F.element_at(a["lin_cat"], j + 1), b_lin(i - d1))
-                )
-    quad_num_cat = (
-        F.array(*qnc_items)
-        if qnc_items
-        else F.expr("array()").cast("array<array<struct<key:int,value:double>>>")
-    )
-
-    qcc_items = []
-    for x, y in cat_pairs(c):
-        if y < c1:
-            qcc_items.append(
-                _scale_kkv(F.element_at(a["quad_cat"], pair_index(x, y, c1) + 1), nb_)
-            )
-        elif x >= c1:
-            qcc_items.append(
-                _scale_kkv(
-                    F.element_at(b["quad_cat"], pair_index(x - c1, y - c1, c2) + 1),
-                    na,
-                )
-            )
-        else:
-            qcc_items.append(
-                F.sort_array(
-                    _kv_cross(
-                        F.element_at(a["lin_cat"], x + 1),
-                        F.element_at(b["lin_cat"], y - c1 + 1),
-                    )
-                )
-            )
-    quad_cat = (
-        F.array(*qcc_items)
-        if qcc_items
-        else F.expr("array()").cast(
-            "array<array<struct<key1:int,key2:int,value:double>>>"
-        )
-    )
-
-    fields += [quad_num_cat.alias("quad_num_cat"), quad_cat.alias("quad_cat")]
+    if not nb:
+        fields += [
+            arr("quad_num_cat", f"array<{_KV_T}>").alias("quad_num_cat"),
+            arr("quad_cat", f"array<{_KKV_T}>").alias("quad_cat"),
+        ]
     return F.struct(*fields)
-
-
-def _flat_entry(
-    part: str, i: int, j: int, k1: Column, k2: Column, val: Column
-) -> Column:
-    """One flat statistic entry struct — field-for-field the layout
-    :func:`~.flatten.flatten_triple` emits."""
-    return F.struct(
-        F.lit(part).alias("part"),
-        F.lit(i).cast("int").alias("i"),
-        F.lit(j).cast("int").alias("j"),
-        k1.cast("int").alias("k1"),
-        k2.cast("int").alias("k2"),
-        val.cast("double").alias("val"),
-    )
 
 
 def multiply_flatten_entries(
@@ -239,160 +221,26 @@ def multiply_flatten_entries(
     shape_right: tuple[int, int],
     nb: bool = False,
 ) -> Column:
-    """Flat entry rows of the ⊗ product, fused (r14, guide §1.2): the
-    array :func:`~.flatten.flatten_triple` would generate from
-    ``multiply_triples(left, right)``, with each slot's product
-    expression inlined directly into its entry struct — the
-    intermediate nested product struct (13+ array allocations per
-    joined key for the (1,1)x(1,1) shape, walked again by the
-    generator) is never built.
-
-    Element-for-element identical to flatten(multiply(...)), in the
-    same emission order: every slot below computes the same arithmetic
-    as the corresponding :func:`multiply_triples` block (scalar slots
-    read the same element_at positions; map slots compose the scale
-    into the entry transform; the cat×cat cross block keeps the same
-    sort so even within-row emission order is unchanged).  Feed to
+    """Flat entry rows of the ⊗ product (r14, guide §1.2): the array
+    :func:`~.flatten.flatten_triple` would generate from
+    ``multiply_triples(left, right)``, element for element and in the
+    same emission order, with each slot's product expression inlined
+    into its entry struct — the intermediate nested product struct
+    (13+ array allocations per joined key for the (1,1)x(1,1) shape,
+    walked again by the generator) is never built.  Feed to
     ``F.inline`` and sum with one grouped aggregation."""
-    d1, c1 = shape_left
-    d2, c2 = shape_right
-    d, c = d1 + d2, c1 + c2
-    a, b = left, right
-    na = a["N"].cast("double")
-    nb_ = b["N"].cast("double")
+    minus1 = F.lit(-1)
+    arrays = [F.array(_entry("N", -1, -1, minus1, minus1, left["N"] * right["N"]))]
+    for s in _product_slots(shape_left, shape_right, nb):
 
-    def a_lin(i: int) -> Column:
-        return F.element_at(a["lin_agg"], i + 1)
-
-    def b_lin(i: int) -> Column:
-        return F.element_at(b["lin_agg"], i + 1)
-
-    arrays = [F.array(_flat_entry("N", -1, -1, F.lit(-1), F.lit(-1), a["N"] * b["N"]))]
-    for i in range(d):
-        val = a_lin(i) * nb_ if i < d1 else b_lin(i - d1) * na
-        arrays.append(
-            F.array(_flat_entry("lin", i, -1, F.lit(-1), F.lit(-1), val))
-        )
-    quad_pairs = [(i, i) for i in range(d)] if nb else [
-        (i, j) for i in range(d) for j in range(i, d)
-    ]
-    for i, j in quad_pairs:
-        if nb:
-            # nb quad slots are the diagonal in storage order (slot p =
-            # pair (p, p)); sides scale like lin
-            val = (
-                F.element_at(a["quad_agg"], i + 1) * nb_
-                if i < d1
-                else F.element_at(b["quad_agg"], i - d1 + 1) * na
+        def entry(k1, k2, val):
+            return _entry(
+                s.part, s.i, s.j,
+                minus1 if k1 is None else k1, minus1 if k2 is None else k2, val,
             )
-        elif j < d1:
-            val = F.element_at(a["quad_agg"], pair_index(i, j, d1) + 1) * nb_
-        elif i >= d1:
-            val = (
-                F.element_at(b["quad_agg"], pair_index(i - d1, j - d1, d2) + 1)
-                * na
-            )
-        else:
-            val = a_lin(i) * b_lin(j - d1)
-        arrays.append(
-            F.array(_flat_entry("quad", i, j, F.lit(-1), F.lit(-1), val))
-        )
 
-    def kv_entries(part: str, i: int, j: int, arr: Column, factor: Column) -> Column:
-        return F.transform(
-            arr,
-            lambda e: _flat_entry(
-                part, i, j, e["key"], F.lit(-1), e["value"] * factor
-            ),
-        )
-
-    for j in range(c):
-        arrays.append(
-            kv_entries("lin_cat", j, -1, F.element_at(a["lin_cat"], j + 1), nb_)
-            if j < c1
-            else kv_entries(
-                "lin_cat", j, -1, F.element_at(b["lin_cat"], j - c1 + 1), na
-            )
-        )
-    if nb:
-        return F.concat(*arrays)
-
-    for i in range(d):
-        for j in range(c):
-            if i < d1 and j < c1:
-                e = kv_entries(
-                    "quad_num_cat", i, j,
-                    F.element_at(a["quad_num_cat"], i * c1 + j + 1), nb_,
-                )
-            elif i >= d1 and j >= c1:
-                e = kv_entries(
-                    "quad_num_cat", i, j,
-                    F.element_at(
-                        b["quad_num_cat"], (i - d1) * c2 + (j - c1) + 1
-                    ),
-                    na,
-                )
-            elif i < d1:  # num from A × cat from B
-                e = kv_entries(
-                    "quad_num_cat", i, j,
-                    F.element_at(b["lin_cat"], j - c1 + 1), a_lin(i),
-                )
-            else:  # num from B × cat from A
-                e = kv_entries(
-                    "quad_num_cat", i, j,
-                    F.element_at(a["lin_cat"], j + 1), b_lin(i - d1),
-                )
-            arrays.append(e)
-
-    def kkv_entries(x: int, y: int, arr: Column, factor: Column) -> Column:
-        return F.transform(
-            arr,
-            lambda e: _flat_entry(
-                "quad_cat", x, y, e["key1"], e["key2"], e["value"] * factor
-            ),
-        )
-
-    for x, y in cat_pairs(c):
-        if y < c1:
-            arrays.append(
-                kkv_entries(
-                    x, y,
-                    F.element_at(a["quad_cat"], pair_index(x, y, c1) + 1),
-                    nb_,
-                )
-            )
-        elif x >= c1:
-            arrays.append(
-                kkv_entries(
-                    x, y,
-                    F.element_at(
-                        b["quad_cat"], pair_index(x - c1, y - c1, c2) + 1
-                    ),
-                    na,
-                )
-            )
-        else:
-            # cat from A × cat from B: full key cross product; the sort
-            # keeps the exact emission order of the unfused path (the
-            # entry prefix (part,i,j) is constant, so ordering by the
-            # entry equals the old sort_array over (key1,key2,value))
-            arrays.append(
-                F.sort_array(
-                    F.flatten(
-                        F.transform(
-                            F.element_at(a["lin_cat"], x + 1),
-                            lambda e1: F.transform(
-                                F.element_at(b["lin_cat"], y - c1 + 1),
-                                lambda e2: _flat_entry(
-                                    "quad_cat", x, y,
-                                    e1["key"], e2["key"],
-                                    e1["value"] * e2["value"],
-                                ),
-                            ),
-                        )
-                    )
-                )
-            )
+        v = _slot_value(s, left, right, entry)
+        arrays.append(F.array(v) if s.scalar else v)
     return F.concat(*arrays)
 
 
@@ -405,7 +253,6 @@ def triple_over_join(
     num2: Sequence[str] = (),
     cat2: Sequence[str] = (),
     nb: bool = False,
-    keep_key: bool = False,
     broadcast_right: bool = False,
     group_by: Sequence[str] = (),
     result_col: str = "triple",
@@ -423,10 +270,11 @@ def triple_over_join(
     Each fact table is aggregated *before* the join, so the join touches
     one row per key per side.  ``broadcast_right=True`` hints the grouped
     right side to broadcast (correct when |distinct keys| is dim-sized).
-    With ``keep_key=True`` returns one product triple per key (skips the
-    final ⊕); ``group_by`` (columns of df1, e.g. a coarser key) yields one
-    summed triple per group — the reference's ``GROUP BY gb`` over the
-    join (README.md:166-172).
+    ``group_by`` (columns of df1, e.g. a coarser key) yields one summed
+    triple per group — the reference's ``GROUP BY gb`` over the join
+    (README.md:166-172).  For one product triple per join key, aggregate
+    each side with :func:`~.cofactor.sum_to_triple`, join, and apply
+    :func:`multiply_triples`.
 
     Join keys follow SQL inner-join semantics (NULL keys never match),
     matching the reference's ``JOIN ... ON a = b``.  Pass
@@ -455,24 +303,15 @@ def triple_over_join(
 
     ``flat_entries=True`` returns the final ⊕ as FLAT entry rows
     (``group_by..., part, i, j, k1, k2, val`` — see
-    :func:`~.cofactor.sum_triples`); incompatible with ``keep_key``.
+    :func:`~.cofactor.sum_triples`) and skips the nested reassembly.
     """
     keys = [on] if isinstance(on, str) else list(on)
     group_by = list(group_by)
-    # join keys are (near-)unique → tiny groups → the collect strategy
-    # (one shuffle per side instead of three); pass strategy="twolevel"
-    # through sum_to_triple directly if your key is low-cardinality
-    g1 = sum_to_triple(
-        df1,
-        num1,
-        cat1,
-        group_by=keys + group_by,
-        nb=nb,
-        result_col="__t1",
-        strategy="collect" if cat1 else "twolevel",
-    )
-    if keep_key and flat_entries:
-        raise ValueError("flat_entries applies to the final ⊕; not with keep_key")
+    # join keys are (near-)unique → tiny groups → the collect builder
+    # (one shuffle per side instead of three); without categorical
+    # columns the dense-only aggregate is already a single shuffle
+    build1 = _sum_to_triple_collect if cat1 else sum_to_triple
+    g1 = build1(df1, num1, cat1, group_by=keys + group_by, nb=nb, result_col="__t1")
     if unique_right:
         # r13: when the right side's join key is UNIQUE (a primary key —
         # the caller's assertion), every group has exactly one row and
@@ -501,15 +340,8 @@ def triple_over_join(
             *keys, lift_columns(num2, cat2, nb=nb).alias("__t2")
         )
     else:
-        g2 = sum_to_triple(
-            df2,
-            num2,
-            cat2,
-            group_by=keys,
-            nb=nb,
-            result_col="__t2",
-            strategy="collect" if cat2 else "twolevel",
-        )
+        build2 = _sum_to_triple_collect if cat2 else sum_to_triple
+        g2 = build2(df2, num2, cat2, group_by=keys, nb=nb, result_col="__t2")
     g2 = g2.withColumnsRenamed({k: f"__rhs_{k}" for k in keys})
     if broadcast_right:
         g2 = F.broadcast(g2)
@@ -519,46 +351,31 @@ def triple_over_join(
         c = lhs.eqNullSafe(rhs) if null_safe_keys else lhs == rhs
         cond = c if cond is None else cond & c
     joined = g1.join(g2, cond, "inner").drop(*[f"__rhs_{k}" for k in keys])
-    if flat_entries:
-        # fused ⊗+flatten (r14, guide §1.2): generate the flat product
-        # entries straight off (__t1, __t2) — the nested product struct
-        # is never built — then ONE grouped sum.  Element-for-element
-        # (values AND emission order) identical to
-        # flatten(multiply_triples(...)), see multiply_flatten_entries.
-        entries = joined.select(
-            *group_by,
-            F.inline(
-                multiply_flatten_entries(
-                    F.col("__t1"),
-                    F.col("__t2"),
-                    (len(num1), len(cat1)),
-                    (len(num2), len(cat2)),
-                    nb=nb,
-                )
-            ),
-        )
-        return entries.groupBy(*group_by, "part", "i", "j", "k1", "k2").agg(
-            F.sum("val").alias("val")
-        )
-    prod = joined.select(
-        *keys,
+    # fused ⊗+flatten (r14, guide §1.2): generate the flat product
+    # entries straight off (__t1, __t2) — the nested product struct is
+    # never built — then ONE grouped sum
+    entries = joined.select(
         *group_by,
-        multiply_triples(
-            F.col("__t1"),
-            F.col("__t2"),
-            (len(num1), len(cat1)),
-            (len(num2), len(cat2)),
-            nb=nb,
-        ).alias(result_col),
+        F.inline(
+            multiply_flatten_entries(
+                F.col("__t1"),
+                F.col("__t2"),
+                (len(num1), len(cat1)),
+                (len(num2), len(cat2)),
+                nb=nb,
+            )
+        ),
     )
-    if keep_key:
-        return prod
-    return sum_triples(
-        prod,
-        result_col,
+    summed = entries.groupBy(*group_by, "part", "i", "j", "k1", "k2").agg(
+        F.sum("val").alias("val")
+    )
+    if flat_entries:
+        return summed
+    return unflatten_triple(
+        summed,
         len(num1) + len(num2),
         len(cat1) + len(cat2),
-        group_by=group_by,
+        group_by,
         nb=nb,
         result_col=result_col,
     )

@@ -6,6 +6,7 @@ import pytest
 
 from duckdb_imputation_spark.functions.triple import Triple
 from duckdb_imputation_spark.operators.cofactor import (
+    _sum_to_triple_collect,
     lift_columns,
     sum_to_triple,
     sum_triples,
@@ -108,18 +109,54 @@ def test_group_with_null_key(spark):
     assert got[None]["lin_cat"] == [[{"key": 3, "value": 2.0}]]
 
 
-def test_collect_strategy_matches_twolevel(ring_fixture):
-    """strategy='collect' (small-groups path) must agree exactly with the
-    default two-level path, including null category keys."""
-    a = sum_to_triple(ring_fixture, NUM, CAT, group_by=["gb"], strategy="collect")
+def test_collect_strategy_matches_twolevel(spark, ring_fixture):
+    """The collect builder (small-groups path) must agree with the
+    two-level path.  Without NULL category keys the nested triples agree
+    exactly.  With NULL keys the two order a map differently (NULL last
+    here, first in the two-level path) and non-integer float sums may
+    differ in the last bits, so the second input — groups of 10, 64, 65
+    and 300 rows, which also runs the sort+fold form above
+    ``_COLLECT_FOLD_MIN_ROWS``, integer-valued numerics and NULL keys —
+    compares the flat entry row sets, nb and non-nb."""
+    from collections import Counter
+
+    from duckdb_imputation_spark.operators.flatten import flatten_triple
+
+    a = _sum_to_triple_collect(ring_fixture, NUM, CAT, group_by=["gb"])
     b = sum_to_triple(ring_fixture, NUM, CAT, group_by=["gb"])
     ga = {r["gb"]: triple_dict(r["triple"]) for r in a.collect()}
     gb_ = {r["gb"]: triple_dict(r["triple"]) for r in b.collect()}
     assert ga == gb_
 
+    rows = [
+        (
+            g,
+            float((r * 7 + g) % 11),
+            float(r % 5 - 2),
+            None if r % 9 == 0 else r % 6,
+            None if r % 13 == 4 else (r * 5 + g) % 4,
+        )
+        for g, size in enumerate((10, 64, 65, 300))
+        for r in range(size)
+    ]
+    df = spark.createDataFrame(rows, "g int, x0 double, x1 double, k0 int, k1 int")
+    for nb in (False, True):
+        got = [
+            Counter(
+                tuple(r)
+                for r in flatten_triple(
+                    build(df, ["x0", "x1"], ["k0", "k1"], group_by=["g"], nb=nb),
+                    2, 2, ["g"], nb=nb,
+                ).collect()
+            )
+            for build in (_sum_to_triple_collect, sum_to_triple)
+        ]
+        assert got[0] == got[1], nb
+        assert any(k[4] is None for k in got[0]), nb  # NULL keys reached the maps
+
 
 def test_collect_strategy_nb_and_global(ring_fixture):
-    a = sum_to_triple(ring_fixture, NUM, CAT, nb=True, strategy="collect").collect()
+    a = _sum_to_triple_collect(ring_fixture, NUM, CAT, nb=True).collect()
     b = sum_to_triple(ring_fixture, NUM, CAT, nb=True).collect()
     assert triple_dict(a[0]["triple"]) == triple_dict(b[0]["triple"])
 

@@ -17,18 +17,25 @@ def triple_dict(row):
     return Triple.from_row(row).to_dict()
 
 
+def per_key_products(df, num1, cat1, num2, cat2, nb=False):
+    """One ⊗ product triple per ``gb``: a grouped cofactor on each side,
+    joined on ``gb``, then :func:`multiply_triples`."""
+    a = sum_to_triple(df, num1, cat1, group_by=["gb"], nb=nb, result_col="A")
+    b = sum_to_triple(df, num2, cat2, group_by=["gb"], nb=nb, result_col="B")
+    return a.join(b, "gb").select(
+        "gb",
+        multiply_triples(
+            F.col("A"), F.col("B"),
+            (len(num1), len(cat1)), (len(num2), len(cat2)), nb=nb,
+        ).alias("triple"),
+    )
+
+
 def test_multiply_equijoin_matches_golden(ring_fixture):
     """multiply_triple(A,B) joined ON gb (reference test_mul.py second
     test_sum_no_lift_groupby, res[0] == gb=1)."""
-    out = triple_over_join(
-        ring_fixture,
-        ring_fixture,
-        on="gb",
-        num1=["b", "c"],
-        cat1=["d", "e"],
-        num2=["a", "c"],
-        cat2=["d", "f"],
-        keep_key=True,
+    out = per_key_products(
+        ring_fixture, ["b", "c"], ["d", "e"], ["a", "c"], ["d", "f"]
     ).collect()
     got = {r["gb"]: triple_dict(r["triple"]) for r in out}
     assert got[1] == GOLDEN_MUL_GB1
@@ -80,17 +87,7 @@ def test_triple_over_join_sums_products(ring_fixture):
 
 
 def test_multiply_nb_variant(ring_fixture):
-    out = triple_over_join(
-        ring_fixture,
-        ring_fixture,
-        on="gb",
-        num1=["b"],
-        cat1=["d"],
-        num2=["a"],
-        cat2=["f"],
-        nb=True,
-        keep_key=True,
-    ).collect()
+    out = per_key_products(ring_fixture, ["b"], ["d"], ["a"], ["f"], nb=True).collect()
     got = {r["gb"]: triple_dict(r["triple"]) for r in out}
     for g in (1, 2):
         rows_g = [r for r in ROWS if r[0] == g]
@@ -169,12 +166,13 @@ def test_triple_over_join_flat_entries_equals_flattened(ring_fixture):
         ).collect()
     )
     assert got == exp
-    # the sum_triples-level flat mode must agree too (the generic form,
-    # not the fused ⊗ generator triple_over_join uses)
+    # the sum_triples-level flat mode must agree too (the generic form
+    # over nested per-key products, not the fused ⊗ generator
+    # triple_over_join uses)
     from duckdb_imputation_spark.operators.cofactor import sum_triples
 
-    prod = triple_over_join(
-        ring_fixture, ring_fixture, keep_key=True, **kwargs
+    prod = per_key_products(
+        ring_fixture, ["b", "c"], ["d", "e"], ["a", "c"], ["d", "f"]
     )
     got2 = sorted(
         tuple(r)

@@ -7,12 +7,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from duckdb_imputation_spark.functions.triple import Triple
-from duckdb_imputation_spark.operators.cofactor import sum_to_triple
+from duckdb_imputation_spark.operators.cofactor import (
+    _sum_to_triple_collect,
+    sum_to_triple,
+)
 
 RNG = np.random.default_rng(123)
 
 
-def random_frame(spark, n=200, d=2, c=2, n_groups=3, null_frac=0.0):
+def random_frame(spark, n=200, d=2, c=2, n_groups=3):
     rows = []
     for _ in range(n):
         g = int(RNG.integers(0, n_groups))
@@ -50,16 +53,15 @@ def close(a: Triple, b: Triple):
 
 
 @pytest.mark.parametrize("d,c,nb", [(1, 1, False), (3, 2, False), (2, 3, True), (4, 0, False), (0, 2, False)])
-@pytest.mark.parametrize("strategy", ["twolevel", "collect", "pandas"])
+@pytest.mark.parametrize("strategy", ["twolevel", "collect"])
 def test_spark_agg_equals_python_algebra(spark, d, c, nb, strategy):
     if strategy == "collect" and c == 0:
-        pytest.skip("collect strategy only differs when cats exist")
-    if strategy == "pandas" and nb:
-        pass  # pandas strategy supports nb too
+        pytest.skip("the collect builder is only used when cats exist")
     df, rows = random_frame(spark, n=150, d=d, c=c)
     num = [f"x{i}" for i in range(d)]
     cat = [f"k{j}" for j in range(c)]
-    out = sum_to_triple(df, num, cat, group_by=["g"], nb=nb, strategy=strategy)
+    build = _sum_to_triple_collect if strategy == "collect" else sum_to_triple
+    out = build(df, num, cat, group_by=["g"], nb=nb)
     got = {r["g"]: Triple.from_row(r["triple"], d_num=d, d_cat=c) for r in out.collect()}
     for g in got:
         close(got[g], python_agg(rows, d, c, group=g, nb=nb))
@@ -90,8 +92,15 @@ def test_max_categories_guard(spark):
 )
 def test_factorized_equals_materialized_shapes(spark, n1, c1, n2, c2, nb):
     """⊗ over the join == cofactor over the materialized join, across
-    degenerate shapes (numeric-only side, categorical-only side, NB)."""
-    from duckdb_imputation_spark.operators.multiply import triple_over_join
+    degenerate shapes (numeric-only side, categorical-only side, NB);
+    on each shape the flat ⊗ emits exactly the rows, in order, that
+    flattening the nested ⊗ does (both walk one slot table)."""
+    from duckdb_imputation_spark.operators.flatten import flatten_triple
+    from duckdb_imputation_spark.operators.multiply import (
+        multiply_flatten_entries,
+        multiply_triples,
+        triple_over_join,
+    )
 
     left_rows, right_rows = [], []
     for i in range(120):
@@ -123,6 +132,26 @@ def test_factorized_equals_materialized_shapes(spark, n1, c1, n2, c2, nb):
     a = Triple.from_row(fact[0]["triple"], d_num=n1 + n2, d_cat=c1 + c2)
     b = Triple.from_row(mat[0]["triple"], d_num=n1 + n2, d_cat=c1 + c2)
     close(a, b)
+
+    sides = sum_to_triple(ldf, num1, cat1, group_by=["k"], nb=nb, result_col="A").join(
+        sum_to_triple(rdf, num2, cat2, group_by=["k"], nb=nb, result_col="B"), "k"
+    )
+    shapes = ((n1, c1), (n2, c2))
+    flat = sides.select(
+        "k", F.inline(multiply_flatten_entries(F.col("A"), F.col("B"), *shapes, nb=nb))
+    ).collect()
+    nested = flatten_triple(
+        sides.select("k", multiply_triples(F.col("A"), F.col("B"), *shapes, nb=nb).alias("t")),
+        n1 + n2, c1 + c2, ["k"], nb=nb, triple_col="t",
+    ).collect()
+
+    def by_key(rows):  # one joined row per key: its entries in emission order
+        out = {}
+        for r in rows:
+            out.setdefault(r["k"], []).append(tuple(r))
+        return out
+
+    assert by_key(flat) == by_key(nested)
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
