@@ -5,11 +5,7 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from duckdb_imputation_spark.queries import (  # noqa: E402
-    ORACLE_FACTORIES,
-    ORACLES,
-    ordered_queries,
-)
+from duckdb_imputation_spark.queries import ORACLES, QUERIES  # noqa: E402
 
 
 def main() -> None:
@@ -18,24 +14,17 @@ def main() -> None:
         "",
         "Auto-generated index of every registered catalog query (one line per",
         "row, first sentence of its docstring).  Oracle column: `sql` = static",
-        "DuckDB twin, `factory` = data-dependent twin (trained constants),",
-        "`rows-only` = non-SQL-expressible (weaker driver check).",
-        "Driver-window order; regenerate with `python docs/gen_catalog.py`.",
+        "DuckDB twin, `factory` = data-dependent twin (trained constants).",
+        "Registration order; regenerate with `python docs/gen_catalog.py`.",
         "",
         "| # | query | oracle | summary |",
         "|---|---|---|---|",
     ]
-    for i, (name, fn) in enumerate(ordered_queries().items(), 1):
+    for i, (name, fn) in enumerate(QUERIES.items(), 1):
         doc = " ".join((fn.__doc__ or "").split())
         cut = doc.find(". ")
         summary = (doc[: cut + 1] if cut != -1 else doc)[:180]
-        kind = (
-            "sql"
-            if name in ORACLES
-            else "factory"
-            if name in ORACLE_FACTORIES
-            else "rows-only"
-        )
+        kind = "sql" if name in ORACLES else "factory"
         lines.append(f"| {i} | `{name}` | {kind} | {summary} |")
     out = os.path.join(os.path.dirname(__file__), "CATALOG.md")
     with open(out, "w") as f:

@@ -25,9 +25,6 @@ REPO = os.path.join(os.path.dirname(__file__), "..")
 sys.path.insert(0, REPO)
 
 from duckdb_imputation_spark.queries import QUERIES  # noqa: E402
-from duckdb_imputation_spark.queries_pending import (  # noqa: E402
-    PENDING_QUERIES,
-)
 
 PROSE = [
     ("SCALING.md", r"(Every registered catalog query \()(\d+)( as of)"),
@@ -36,12 +33,6 @@ PROSE = [
     # 198 at catalog 200) because the sync only covered two files.
     ("PARITY.md", r"(docs/CATALOG\.md \()(\d+)( oracle-verified rows\))"),
 ]
-# The staging-lane count drifts the same way (PLANS_r15 §10 said 4/4
-# with five rows on the tree): PARITY.md quotes the LIVE pending count
-# and this sync pins it to len(PENDING_QUERIES).
-PENDING_PROSE = [
-    ("PARITY.md", r"(queries_pending\.py\): )(\d+)( rows? pending)"),
-]
 SNAP = os.path.join(REPO, "tests", "plan_shapes_sf0001.json")
 
 
@@ -49,9 +40,8 @@ def main() -> None:
     check = "--check" in sys.argv
     stale = []
 
-    for target, fname, pat in [
-        (len(QUERIES), f, p) for f, p in PROSE
-    ] + [(len(PENDING_QUERIES), f, p) for f, p in PENDING_PROSE]:
+    target = len(QUERIES)
+    for fname, pat in PROSE:
         path = os.path.join(REPO, fname)
         with open(path) as f:
             text = f.read()

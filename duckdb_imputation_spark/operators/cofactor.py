@@ -512,12 +512,10 @@ def _sum_to_triple_collect(
     buffer, so :func:`sum_to_triple`'s two-level path remains the choice
     for large groups — it stays map-side-combine-bounded.
 
-    Agrees with :func:`sum_to_triple` entry for entry, with two
-    differences in the nested arrays: a NULL categorical key sorts LAST
-    in each map here and FIRST in the two-level path, and float sums
+    Agrees with :func:`sum_to_triple` entry for entry, map order
+    included (a NULL categorical key sorts first in both); float sums
     over non-integer values may differ in the last bits (a different
-    accumulation order).  The flat entry rows (``flatten_triple``) are
-    equal as a set on integer-valued data, NULL keys included.
+    accumulation order).
     """
     num_cols, cat_cols = list(num_cols), list(cat_cols)
     d, c = len(num_cols), len(cat_cols)
@@ -552,11 +550,8 @@ def _sum_to_triple_collect(
     #     fold — O(rows log rows + keys), so a group with many rows and
     #     many keys can no longer go quadratic.
     # Value identity of the fold form, bit for bit:
-    #   * key SET and ORDER: the sort key leads with an is-null flag, so
-    #     distinct keys come out ascending with NULL last — exactly
-    #     array_sort(array_distinct(<int array>))'s placement (primitive
-    #     array_sort puts nulls last; a bare struct sort would put the
-    #     NULL key FIRST, hence the flag);
+    #   * key SET and ORDER: distinct keys come out ascending with NULL
+    #     first, as sort_array(array_distinct(<int array>)) places them;
     #   * per-key float sums: the 'pos' field (the element's __rows
     #     index) breaks ties inside a key, so each key's x values fold
     #     in __rows order — the same order filter() preserved — and the
@@ -573,7 +568,7 @@ def _sum_to_triple_collect(
         )
 
     def _col_keys(j: int) -> str:
-        return f"array_sort(array_distinct(transform(__rows, e -> e.__k{j})))"
+        return f"sort_array(array_distinct(transform(__rows, e -> e.__k{j})))"
 
     def _kv_count_filter(j: int) -> str:
         return (
@@ -602,8 +597,7 @@ def _sum_to_triple_collect(
 
     def _fold_single(j: int) -> str:
         elem = (
-            f"named_struct('nl', CAST((e.__k{j} IS NULL) AS INT), "
-            f"'k', e.__k{j}, 'pos', i"
+            f"named_struct('k', e.__k{j}, 'pos', i"
             + "".join(f", '__x{i}', e.__x{i}" for i in range(_d_sums))
             + ")"
         )

@@ -64,429 +64,6 @@ def resolve_oracles(sf_dir: str | None = None) -> dict[str, str]:
     return out
 
 
-# --------------------------------------------------------------------- #
-# Driver ordering.  The correctness harness verifies the FIRST 50        #
-# registered queries; registration order alone left the newest oracles   #
-# (ML histograms, pivot/cube breadth, …) past the cutoff in round 2.     #
-# _DRIVER_PRIORITY pins the queries that most need a driver hash row    #
-# (new rows, or rows whose implementation changed since their last      #
-# driver-green round) to the front; long-stable rows are rotated behind #
-# them and stay covered by the local full-catalog replay                #
-# (tests/test_oracle_parity.py).  tests/test_catalog_order.py enforces  #
-# that nothing never-driver-verified sits past the cutoff.              #
-# --------------------------------------------------------------------- #
-
-# Grandfather clause for the evidence-age CI ratchet
-# (tests/test_catalog_order.py::test_evidence_age_within_window): a row
-# may age past the N-4 line ONLY by appearing here with a documented
-# reason.  Deliberately empty — the rule exists so exceptions are
-# visible diffs, not silent slips.
-_EVIDENCE_AGE_EXCEPTIONS: dict[str, str] = {}
-
-# Rotation-budget arithmetic (VERDICT r11 Next #2), stated once and
-# machine-checked by tests/test_catalog_order.py::
-# test_rotation_schedule_feasible: the evidence-age rule re-verifies
-# every row within 5 rounds and the driver window is 50 slots, so the
-# steady-state catalog ceiling is 5 x 50 = 250 rows and the SUSTAINABLE
-# registration budget at catalog 200 is (250 - 200) / 5 ≈ 10 new
-# rows/round AVERAGE — and because past cohorts are lumpy (r8:46,
-# r9:50, r10:48, r11:50, r12:50) the per-round headroom is what the
-# simulation computes, not a constant.  Registering more than the
-# simulated slack in any round makes a LATER round's mandatory
-# re-verification set exceed 50 slots with no warning until the ratchet
-# trips; the test fails the moment such a registration lands.
-_ROTATION_BUDGET_NOTE = (
-    "re-verify period 5 rounds x window 50 = 250-row ceiling; "
-    "catalog 200 => ~10 new rows/round sustainable average"
-)
-
-_DRIVER_PRIORITY: list[str] = [
-    # round 14 window = the committed 10-row queue head (the r9-evidence
-    # cohort deferred from r13 — mandatory at this round's close) + the
-    # 3 rows promoted out of queries_pending.py (never driver-verified
-    # -> mandatory in-window) + 3 r4-hygiene re-entries (rows whose
-    # plans changed in this round's optimizations) + 34 of the 48-row
-    # r10-evidence cohort pre-paid one round early (the other 14 slide
-    # to r15's head — deferral trades documented at _DRIVER_DEMOTE).
-    # Forward feasibility is machine-checked by
-    # tests/test_catalog_order.py::test_rotation_schedule_feasible.
-    #
-    # (a) the machine-checked r14 queue head (character-for-character
-    # the _NEXT_WINDOW_QUEUE the r13 tree committed):
-    "anti_join_customers_no_orders",
-    "corpus_data_card",
-    "linreg_via_triple_vs_regr",
-    "minhash_signatures",
-    "percentile_quantities",
-    "quality_classifier_report_documents",
-    "semantic_dedup_clustered",
-    "sessionize_events",
-    "streaming_heavy_hitters_by_source",
-    "triple_lineitem_grouped",
-    # (b) the three rows staged through r13 in queries_pending.py, now
-    # registered (never driver-verified -> mandatory in-window):
-    "sequence_count_events",
-    "sequence_count_stream_events",
-    "top_event_paths_events",
-    # (c) r4 hygiene re-entries — these rows' PLANS changed in the r14
-    # optimization work (flat-entry factorized ⊕ for both factorized
-    # rows; batched shared-scan top-k for ann_recall_batch; the
-    # strict-order event frame hoisted out of the level loop), so they
-    # return to the window for one round.  (The fourth changed row,
-    # triple_factorized_join_grouped, is already mandatory-adjacent in
-    # cohort (d) below.)  Rows touched only by plan-IDENTICAL refactors
-    # stay demoted on machine-checked premises — see _DRIVER_DEMOTE:
-    "triple_factorized_join",
-    "window_funnel_strict_order_events",
-    "ann_recall_batch",
-    # (d) 34 of the 48 r10-evidence rows (the whole cohort is mandatory
-    # by r15 close; pulling 34 now leaves r15 = 14 deferred + slack,
-    # simulation-green).  triple_factorized_join_grouped doubles as the
-    # fourth r14 hygiene re-entry:
-    "ann_ivfpq_topk",
-    "bm25_search_documents",
-    "bpe_encode_documents",
-    "chunk_documents_catalog",
-    "dedup_cluster_sizes",
-    "embedding_dup_pairs_lsh",
-    "funnel_stream_view_click_purchase_events",
-    "interval_overlap_view_purchase",
-    "line_dedup_documents",
-    "minhash_index_dedup_new",
-    "multiclass_report_events",
-    "multimodal_decode_wav",
-    "multimodal_image_features_netpbm",
-    "nb_train_predict_histogram",
-    "nb_triple_orders",
-    "normalize_text_documents",
-    "pca_project_embeddings",
-    "q3_shipping_priority",
-    "q5_region_revenue",
-    "q6_forecast_revenue",
-    "range_join_click_view_window",
-    "repetition_metrics_documents",
-    "rolling_customer_spend",
-    "salted_join_segment_revenue",
-    "sql_passthrough_shared_dialect",
-    "string_functions_parts",
-    "strip_html_documents",
-    "train_val_test_split",
-    "triple_factorized_join_grouped",
-    "triple_lineitem_full",
-    "unpivot_lineitem_charges",
-    "validate_rows_lineitem",
-    "vocabulary_top_tokens",
-    "zorder_key_lineitem",
-]
-
-
-# NEXT-ROTATION CANDIDATES — the r13 window head, machine-visible so
-# the evidence-age tripwire can tell "scheduled, waiting for the round"
-# from "slipped" (VERDICT r11 wrong #1): when CORRECTNESS_r12.json
-# lands, test_evidence_age_within_window computes N=13 and names the
-# three deferred r8 rows below; because they appear HERE they xfail the
-# suite with the queue in the message instead of failing it red.
-_NEXT_WINDOW_QUEUE: list[str] = [
-    # the fourteen r10-evidence rows deferred from the r14 window
-    # (sibling trades at _DRIVER_DEMOTE) — mandatory r15 head:
-    "auc_ovr_events",
-    "brand_revenue",
-    "cube_lineitem",
-    "duplicate_passage_flags",
-    "embedding_cosine_scores",
-    "events_microsecond_exact",
-    "funnel_timing_events",
-    "intersect_except_parts",
-    "multimodal_media_meta",
-    "multimodal_video_frames_netpbm",
-    "qda_train_predict_histogram",
-    "snapshot_diff_documents",
-    "temperature_mix_sample",
-    "token_entropy_documents",
-]
-
-# Registration staging lane: queries_pending.py (EMPTY as of the r13
-# promotion of the five r12-staged rows — see the round-13 section at
-# the end of this file).  New operators built in a round whose window
-# has no slots go THERE with full oracles and ride
-# tests/test_pending_rows.py until a slot opens.  Still-open optional
-# twins of driver-green rows (resample_agg fast path, scd2_snapshot_at
-# point-in-time row, json_key_profile HLL twin, validate_rows capped
-# sample) carry their rationale in git history at this comment.
-
-# Hash-green in at least one past driver round (see CORRECTNESS_r*.json)
-# AND implementation-stable since that round; rotated past the 50-query
-# cutoff to make room.  Still verified every round by the local
-# full-catalog replay.  A query whose code changes must move back to
-# _DRIVER_PRIORITY for one round (VERDICT r4 hygiene rule).
-_DRIVER_DEMOTE: list[str] = [
-    # fourteen r10-evidence rows deferred to the r15 window (they stay
-    # inside the N-4 line through r14 close; each code path keeps
-    # fresher or same-round driver evidence via a sibling):
-    #   * auc_ovr_events — multiclass_report_events in-window rides the
-    #     same one-vs-rest per-class score surface; the rank-AUC core
-    #     carries r13 evidence via auc_value_purchase_events;
-    #   * brand_revenue — salted_join_segment_revenue in-window drives
-    #     the same dim-join revenue aggregate (plus q3/q5 in-window);
-    #   * cube_lineitem — unpivot_lineitem_charges in-window covers the
-    #     lineitem SQL-surface lane; the grouping-sets twin
-    #     rollup_lineitem carries r13 evidence;
-    #   * duplicate_passage_flags — line_dedup_documents in-window is
-    #     the same intra-document text-dedup family, and
-    #     minhash_signatures in-window drives the shingle kernel;
-    #   * embedding_cosine_scores — ann_recall_batch in-window computes
-    #     the identical exact-cosine fold as its truth legs (and the
-    #     row stays timed every round in the headline bench);
-    #   * events_microsecond_exact — the integer-µs event-time
-    #     discipline is driven in-window by sessionize_events and the
-    #     funnel/sequence rows (unix_micros on every path);
-    #   * funnel_timing_events — the funnel_users core carries r13
-    #     evidence via funnel_view_click_purchase_events, and the
-    #     funnel family is in-window via the strict-order and sequence
-    #     rows;
-    #   * intersect_except_parts — string_functions_parts in-window
-    #     covers the parts-table SQL-surface lane (set-op semantics
-    #     additionally pinned by tests);
-    #   * multimodal_media_meta — multimodal_decode_wav in-window
-    #     drives the same media header-parse module surface;
-    #   * multimodal_video_frames_netpbm —
-    #     multimodal_image_features_netpbm in-window drives the same
-    #     netpbm frame parser (video = concatenated netpbm frames);
-    #   * qda_train_predict_histogram — nb_train_predict_histogram
-    #     in-window rides the same train/predict + sql_twin
-    #     scaffolding over the identical feature frame;
-    #   * snapshot_diff_documents — the snapshot row-set machinery's
-    #     sibling scd2_snapshot_events carries r13 evidence;
-    #   * temperature_mix_sample — train_val_test_split in-window
-    #     drives the same deterministic hash-split sampling family;
-    #   * token_entropy_documents — vocabulary_top_tokens in-window is
-    #     the same ws_tokens frequency aggregate, and corpus_data_card
-    #     in-window hash-gates the shared textstats expressions.
-    "auc_ovr_events",
-    "brand_revenue",
-    "cube_lineitem",
-    "duplicate_passage_flags",
-    "embedding_cosine_scores",
-    "events_microsecond_exact",
-    "funnel_timing_events",
-    "intersect_except_parts",
-    "multimodal_media_meta",
-    "multimodal_video_frames_netpbm",
-    "qda_train_predict_histogram",
-    "snapshot_diff_documents",
-    "temperature_mix_sample",
-    "token_entropy_documents",
-    # rotated out round 14: the r13 window minus its three hygiene
-    # re-entries (CORRECTNESS_r13.json: 50/50 rows+schema+hash, zero
-    # err) — the r18 rotation cohort.  Premise notes for rows whose
-    # module code changed this round (the r12 precedent: a row may
-    # stay demoted only on a machine-checked plan-identity premise):
-    #   * minhash_dedup_survivors, decontaminate_documents,
-    #     dedup_components_transitive — dedup.py's band-bucket key
-    #     construction was factored into _band_buckets_from_sig
-    #     (ADVICE r13 #3), a pure code move producing the identical
-    #     resolved expression; the plan-shape ratchet
-    #     (tests/plan_shapes_sf0001.json) passed unchanged for every
-    #     dedup row after the refactor;
-    #   * window_funnel_events_ntz_raw / window_funnel_events /
-    #     window_funnel_stream_events — window_funnel gained the
-    #     OPT-IN prefilter_events parameter (default False) and the
-    #     strict-order branch hoisted; the non-strict branch these
-    #     rows run is expression-identical and their ratchet rows
-    #     passed unchanged;
-    #   * pagerank_navigation / ppr_navigation_seeded — graph.py
-    #     change was docstring-only (ADVICE r13 #2).
-    "ann_ivf_topk",
-    "asof_join_click_to_view",
-    "auc_value_purchase_events",
-    "case_when_null_buckets",
-    "casts_and_dates",
-    "correlated_subqueries_orders",
-    "cross_join_triples",
-    "decontaminate_documents",
-    "dedup_components_transitive",
-    "distinct_category_dictionary",
-    "events_hourly_rollup",
-    "ewma_events",
-    "exact_dedup_documents",
-    "funnel_view_click_purchase_events",
-    "heavy_hitter_tokens",
-    "json_extract_events",
-    "ks_value_click_view_events",
-    "lda_train_predict_histogram",
-    "leakage_safe_folds_documents",
-    "lift_sum_equivalence",
-    "list_extract_position",
-    "math_scalar_functions",
-    "mean_mode_stats",
-    "mice_recovery_rmse",
-    "minhash_dedup_survivors",
-    "orders_window_top3",
-    "per_class_calibration_events",
-    "pii_scrub_documents",
-    "pivot_order_status",
-    "q1_pricing_summary",
-    "quality_classifier_documents",
-    "quantile_buckets_lineitem",
-    "quantized_cosine_topk",
-    "rollup_lineitem",
-    "scd2_snapshot_events",
-    "seasonal_anomalies_events",
-    "semi_join_urgent_customers",
-    "sequence_id_generation",
-    "stratified_sample_documents",
-    "streaming_calibration_events",
-    "target_encode_events",
-    "text_stats_documents",
-    "unigram_logprob_scores",
-    "union_partition_counts",
-    "validate_lineitem_constraints",
-    "window_funnel_events_ntz_raw",
-    "window_funnel_stream_events",
-    # rotated out round 13: the entire r12 window
-    # (CORRECTNESS_r12.json: 50/50 rows+schema+hash, zero err), all
-    # implementation-stable this round — the r17 rotation cohort:
-    "ann_recall_at_k",
-    "anova_value_by_type_events",
-    "benford_value_events",
-    "bigram_logprob_scores",
-    "bloom_decontaminate_documents",
-    "bottomk_grouped_documents",
-    "chi2_type_hour_events",
-    "collapse_rare_tokens_documents",
-    "connected_components_alternating_pages",
-    "containment_join_documents",
-    "cramers_v_type_hour_events",
-    "cusum_events",
-    "cusum_stream_events",
-    "dsir_importance_weights",
-    "entropy_type_by_hour_events",
-    "ewma_halflife_stream_events",
-    "fuzzy_pairs_customer_names",
-    "heavy_hitter_tokens_by_source",
-    "hybrid_rrf_documents",
-    "json_key_profile_lineitem",
-    "leakage_safe_split_documents",
-    "logreg_predict_events",
-    "logreg_purchase_events",
-    "lpa_communities_navigation",
-    "mannwhitney_value_events",
-    "mice_high_sql_oracle",
-    "mice_low_sql_oracle",
-    "moments_value_by_type_events",
-    "novelty_scores_documents",
-    "pmi_collocations_documents",
-    "ppr_navigation_seeded",
-    "psi_value_drift_events",
-    "resample_agg_events",
-    "scd2_user_event_type",
-    "source_overlap_documents",
-    "spearman_qty_price_lineitem",
-    "streaming_components_events",
-    "streaming_heavy_hitters_tokens",
-    "streaming_ohlc_rollup_events",
-    "streaming_psi_events",
-    "streaming_scd2_events",
-    "streaming_sessionize_events",
-    "streaming_sliding_events",
-    "streaming_trending_events",
-    "tfidf_keywords_documents",
-    "trending_pages_daily_events",
-    "triangle_counts_pages",
-    "weighted_sample_by_source_documents",
-    "welch_ttest_events",
-    "winsorize_lineitem",
-    # r11-evidence cohort minus its one r13 hygiene re-entry
-    # (quantized_cosine_topk, int8 scale-guard change — see
-    # _DRIVER_PRIORITY) — the r15/r16 rotation cohort.  Premise notes
-    # for rows whose module code changed since their evidence round
-    # (ADVICE r10 #1 asks for accurate premises, VERDICT r12 wrong #4
-    # for the exact dead-branch claim):
-    #   * funnel_timing_events stays demoted although funnel_timing
-    #     gained an accuracy>=1 validation guard in r12: the guard is
-    #     a Python-side ValueError before any plan is built; the
-    #     default exact=True path the row runs is bit-identical in
-    #     output AND plan.
-    #   * the funnel-family rows (window_funnel_events,
-    #     funnel_view_click_purchase, funnel_timing_events,
-    #     funnel_view_click_purchase_events) stayed demoted through
-    #     the r12 NTZ fix on TWO distinct premises, stated separately:
-    #     (1) the added .cast("timestamp") wrappers are no-ops on the
-    #     TIMESTAMP inputs every registered row feeds — optimizer-
-    #     eliminated (SimplifyCasts), verified by regenerating all
-    #     four rows' plan shapes to a zero diff; (2) the SEMANTIC
-    #     within-bound change (double-seconds -> exact integer µs)
-    #     lives in funnel_users' `within is not None` branch
-    #     (operators/funnel.py:103-115), which is DEAD CODE for every
-    #     registered plain-funnel row — funnel_view_click_purchase,
-    #     funnel_view_click_purchase_events,
-    #     funnel_stream_view_click_purchase_events and
-    #     funnel_timing_events all pass within=None.  A live-
-    #     expression semantic change could NOT ride premise (1); as
-    #     of r13 the within branch is additionally driver-gated by
-    #     window_funnel_events_ntz_raw (within=8h on raw NTZ input).
-    "bloom_membership_fingerprints",
-    "bm25_index_search_documents",
-    "bottomk_sample_documents",
-    "bpe_train_merges",
-    "calibration_value_purchase_events",
-    "cmsketch_token_counts",
-    "connected_components_pages",
-    "dedup_keep_best_survivors",
-    "doc_quality_nb_histogram",
-    "domain_divergence_documents",
-    "dsir_bucketed_importance_weights",
-    "encode_documents_vocab",
-    "equidepth_histogram_lineitem",
-    "ewma_halflife_events",
-    "fill_forward_events",
-    "funnel_view_click_purchase",
-    "fuzzy_join_part_typos",
-    "global_ranking_quantity",
-    "gopher_rules_documents",
-    "grouped_covariance_lineitem",
-    "grouped_linreg_lineitem",
-    "hits_navigation",
-    "interpolated_bigram_scores",
-    "mice_categorical_sql_oracle",
-    "mice_single_col_sql_oracle",
-    "multimodal_decode_netpbm",
-    "ngram_decontaminate_documents",
-    "ngram_jaccard_dups",
-    "pack_documents_bins",
-    "pagerank_navigation",
-    "perplexity_buckets_documents",
-    "pq_cosine_topk",
-    "profile_lineitem",
-    "remove_duplicate_passages_catalog",
-    "resample_interpolate_events",
-    "retention_cohorts_events",
-    "robust_outliers_lineitem",
-    "semantic_dedup_survivors",
-    "simhash_documents",
-    "sketch_distinct_tokens",
-    "sliding_window_events",
-    "streaming_bloom_sink_fingerprints",
-    "streaming_retention_events",
-    "streaming_rollup_events",
-    "top_label_calibration_events",
-    "triple_lineitem_wide",
-    "weighted_sample_documents",
-    "window_funnel_events",
-]
-
-
-def ordered_queries() -> dict[str, QueryFn]:
-    """Registration dict reordered so _DRIVER_PRIORITY names come first
-    and _DRIVER_DEMOTE names last (names not yet registered are
-    skipped); everything else keeps registration order in between."""
-    front = [n for n in _DRIVER_PRIORITY if n in QUERIES]
-    back = [n for n in _DRIVER_DEMOTE if n in QUERIES]
-    pinned = set(front) | set(back)
-    mid = [n for n in QUERIES if n not in pinned]
-    return {n: QUERIES[n] for n in front + mid + back}
-
-
 def _li(spark, sf):
     return load_table(spark, sf, "lineitem")
 
@@ -11175,11 +10752,8 @@ def top_label_calibration_events(spark, sf):
 
 
 # --------------------------------------------------------------------- #
-# Round-13 registrations: the five rows staged in queries_pending.py    #
-# through r12 (VERDICT r12 Next #1 — promotion is a move: the factories #
-# and oracles below are the staged ones verbatim, minus the lazy        #
-# .queries imports that promotion makes local, plus the ADVICE r12 #4   #
-# empty-truth guard in the batch-recall oracle), and the raw-parquet    #
+# Round-13 registrations: five funnel/recall rows (the batch-recall     #
+# oracle carries an empty-truth guard), and the raw-parquet             #
 # TIMESTAMP_NTZ input-contract row (VERDICT r12 missing #3 / Next #5).  #
 # --------------------------------------------------------------------- #
 
@@ -11750,11 +11324,7 @@ def window_funnel_events_ntz_raw(spark, sf):
 
 
 # --------------------------------------------------------------------- #
-# Round-14 registrations: the three rows staged through r13 in          #
-# queries_pending.py (sequence_count / its live twin / top_paths —      #
-# operators built in the interrupted r13 build window), promoted when   #
-# the r14 rotation opened slots (VERDICT r13 Next #9).  Moved verbatim; #
-# see queries_pending.py's docstring and git history for the staging.   #
+# Round-14 registrations: sequence_count, its live twin and top_paths.  #
 # --------------------------------------------------------------------- #
 
 

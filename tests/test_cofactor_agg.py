@@ -111,23 +111,21 @@ def test_group_with_null_key(spark):
 
 def test_collect_strategy_matches_twolevel(spark, ring_fixture):
     """The collect builder (small-groups path) must agree with the
-    two-level path.  Without NULL category keys the nested triples agree
-    exactly.  With NULL keys the two order a map differently (NULL last
-    here, first in the two-level path) and non-integer float sums may
-    differ in the last bits, so the second input — groups of 10, 64, 65
-    and 300 rows, which also runs the sort+fold form above
-    ``_COLLECT_FOLD_MIN_ROWS``, integer-valued numerics and NULL keys —
-    compares the flat entry row sets, nb and non-nb."""
-    from collections import Counter
-
-    from duckdb_imputation_spark.operators.flatten import flatten_triple
-
+    two-level path, nested triples and map order included."""
     a = _sum_to_triple_collect(ring_fixture, NUM, CAT, group_by=["gb"])
     b = sum_to_triple(ring_fixture, NUM, CAT, group_by=["gb"])
     ga = {r["gb"]: triple_dict(r["triple"]) for r in a.collect()}
     gb_ = {r["gb"]: triple_dict(r["triple"]) for r in b.collect()}
     assert ga == gb_
 
+
+@pytest.mark.parametrize("nb", [False, True])
+def test_collect_matches_twolevel_with_null_keys(spark, nb):
+    """Groups of 10, 64, 65 and 300 rows — which also run the sort+fold
+    form above ``_COLLECT_FOLD_MIN_ROWS`` — with NULL category keys and
+    integer-valued numerics (so float sums are exact in any order): the
+    two builders' nested triples are equal, a NULL key sorting first in
+    each map on both."""
     rows = [
         (
             g,
@@ -140,19 +138,18 @@ def test_collect_strategy_matches_twolevel(spark, ring_fixture):
         for r in range(size)
     ]
     df = spark.createDataFrame(rows, "g int, x0 double, x1 double, k0 int, k1 int")
-    for nb in (False, True):
-        got = [
-            Counter(
-                tuple(r)
-                for r in flatten_triple(
-                    build(df, ["x0", "x1"], ["k0", "k1"], group_by=["g"], nb=nb),
-                    2, 2, ["g"], nb=nb,
-                ).collect()
-            )
-            for build in (_sum_to_triple_collect, sum_to_triple)
-        ]
-        assert got[0] == got[1], nb
-        assert any(k[4] is None for k in got[0]), nb  # NULL keys reached the maps
+    got = [
+        {
+            r["g"]: r["triple"]
+            for r in build(
+                df, ["x0", "x1"], ["k0", "k1"], group_by=["g"], nb=nb
+            ).collect()
+        }
+        for build in (_sum_to_triple_collect, sum_to_triple)
+    ]
+    assert got[0] == got[1]
+    # NULL keys reached the maps
+    assert got[0][3]["lin_cat"][0][0]["key"] is None
 
 
 def test_collect_strategy_nb_and_global(ring_fixture):

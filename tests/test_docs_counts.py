@@ -45,15 +45,3 @@ def test_parity_md_quotes_current_catalog_count():
     assert m, "PARITY.md lost its inventory-count sentence"
     assert int(m.group(1)) == _catalog_size()
 
-
-def test_parity_md_quotes_current_pending_count():
-    """The staging-lane count is live state (PLANS_r15 §10 drifted to
-    4/4 with five rows on the tree): PARITY.md quotes it and this test
-    pins it to the actual lane."""
-    from duckdb_imputation_spark.queries_pending import PENDING_QUERIES
-
-    with open(os.path.join(REPO, "PARITY.md")) as f:
-        text = f.read()
-    m = re.search(r"queries_pending\.py\): (\d+) rows? pending", text)
-    assert m, "PARITY.md lost its staging-lane sentence"
-    assert int(m.group(1)) == len(PENDING_QUERIES)

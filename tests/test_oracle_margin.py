@@ -26,9 +26,8 @@ pytestmark = pytest.mark.skipif(
 
 def _window_oracles():
     import __spark_entry__ as em
-    from duckdb_imputation_spark.queries import ordered_queries
 
-    window = list(ordered_queries())[:50]
+    window = list(em.queries())[:50]
     return window, em.oracle_sql()
 
 

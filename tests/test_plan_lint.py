@@ -1,9 +1,9 @@
 """lint_plan: the SCALING.md checklist as code.
 
-Each red flag is triggered with a deliberately bad plan, then the
-headline pipelines are asserted clean — so a future edit that
-reintroduces a global window or a cartesian product fails CI, not the
-100 TB run.
+Each red flag is triggered with a deliberately bad plan, then every
+catalog row and the library operators without catalog rows are
+asserted clean — so a future edit that reintroduces a global window or
+a cartesian product fails CI, not the 100 TB run.
 """
 
 import pytest
@@ -13,6 +13,7 @@ from pyspark.sql import types as T
 
 from duckdb_imputation_spark.plans import lint_plan
 from duckdb_imputation_spark.queries import QUERIES
+from test_oracle_parity import plan_checks
 
 SF = "/root/testdata/sf0.001"
 
@@ -54,44 +55,23 @@ def test_clean_aggregation_has_no_errors(spark):
     assert codes(df, "error") == set()
 
 
-def _driver_window() -> set:
-    from duckdb_imputation_spark.queries import ordered_queries
-
-    return set(list(ordered_queries())[:50])
-
-
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_catalog_pipelines_lint_clean(spark, name):
     """EVERY registered catalog query must carry zero error-level
-    findings — the executable form of the r2-r4 verdict fixes (no
-    global windows, no cartesian blow-ups, no row-Python UDFs).  The
-    known scale-benign shapes — scalar/constant-key aggregate behind a
-    SinglePartition exchange or a 1-row broadcast nested-loop join —
-    are recognized by lint_plan itself (downgraded to info), so a
-    future edit that reintroduces a real serialization point fails CI,
-    not the 100 TB run.
+    findings — no global windows, no cartesian blow-ups, no row-Python
+    UDFs.  The known scale-benign shapes — scalar/constant-key aggregate
+    behind a SinglePartition exchange or a 1-row broadcast nested-loop
+    join — are recognized by lint_plan itself (downgraded to info).
 
-    Driver-window rows additionally must emit SCALAR columns only: the
-    driver's canonicalizer sorts rows by every column and dies on
-    array/map/struct values (`unhashable type: 'list'` — r5's one red
-    row, encode_documents_vocab).  Digest arrays as
-    md5(concat_ws(' ', arr)) + a length column instead."""
-    from pyspark.sql.types import ArrayType, MapType, StructType
-
-    df = QUERIES[name](spark, SF)
-    errs = [f for f in lint_plan(df) if f.severity == "error"]
-    assert not errs, f"{name}: {errs}"
-    if name in _driver_window():
-        complex_cols = [
-            f.name
-            for f in df.schema.fields
-            if isinstance(f.dataType, (ArrayType, MapType, StructType))
-        ]
-        assert not complex_cols, (
-            f"{name} is inside the 50-row driver window but emits "
-            f"non-scalar columns {complex_cols} — the driver "
-            "canonicalizer cannot sort these; project a digest instead"
-        )
+    Every row must also emit SCALAR columns only: a canonicalizer that
+    sorts rows by every column dies on array/map/struct values.  Digest
+    arrays as md5(concat_ws(' ', arr)) + a length column instead."""
+    checks = plan_checks(spark, name)
+    assert not checks["lint"], f"{name}: {checks['lint']}"
+    assert not checks["complex columns"], (
+        f"{name} emits non-scalar columns {checks['complex columns']}; "
+        "project a digest instead"
+    )
 
 
 def test_warns_constant_partition_exchange(spark):

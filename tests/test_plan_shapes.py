@@ -6,7 +6,8 @@ the quieter regression — an edit that adds an Exchange (a full network
 round of the data below it at scale) without anyone noticing.  Fewer
 exchanges than the snapshot is allowed (improvements ratchet down);
 regenerate after an intentional improvement or a new catalog row with
-``python docs/gen_plan_shapes.py``.
+``python docs/gen_plan_shapes.py``.  The shape is the one
+test_oracle_parity's catalog pass records after running the row.
 """
 
 import json
@@ -14,10 +15,9 @@ import os
 
 import pytest
 
-from duckdb_imputation_spark.plans import plan_shape
 from duckdb_imputation_spark.queries import QUERIES
+from test_oracle_parity import plan_checks
 
-SF = "/root/testdata/sf0.001"
 SNAP_PATH = os.path.join(os.path.dirname(__file__), "plan_shapes_sf0001.json")
 
 with open(SNAP_PATH) as _f:
@@ -35,15 +35,7 @@ def test_snapshot_covers_catalog():
 def test_plan_shape_does_not_regress(spark, name):
     if name not in QUERIES:
         pytest.skip("query was removed; prune the snapshot entry")
-    # cached frames from other tests/queries swap exchanges for
-    # InMemoryTableScan and skew the counts — measure uncached
-    spark.catalog.clearCache()
-    df = QUERIES[name](spark, SF)
-    df.collect()
-    # plan_shape strips cached subtrees: a deliberately persisted frame
-    # (e.g. bloom_decontaminate's filter) re-prints its build plan at
-    # every probe, which would over-count exchanges k-fold
-    got = plan_shape(df)
+    got = plan_checks(spark, name)["shape"]
     want = SNAPSHOT[name]
     for metric, limit in want.items():
         assert got[metric] <= limit, (
