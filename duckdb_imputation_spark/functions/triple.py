@@ -239,6 +239,37 @@ class Triple:
             ]
         return t
 
+    @classmethod
+    def from_entries(cls, rows, d_num: int, d_cat: int, nb: bool = False) -> "Triple":
+        """⊕-fold flat entry rows (``part, i, j, k1, k2, val`` — the
+        :func:`~duckdb_imputation_spark.operators.flatten.triple_entries`
+        layout; any order, any duplication) into one triple.  No rows
+        give the zero triple.
+
+        The rules of :meth:`from_row` apply: an entry with a NULL category
+        key is dropped, and so is a NULL value (a sum over no value)."""
+        t = cls.zero(d_num, d_cat, nb=nb)
+        for r in rows:
+            part, i, j, v = r["part"], r["i"], r["j"], r["val"]
+            if v is None:
+                continue
+            v = float(v)
+            if part == "N":
+                t.n += int(v)
+            elif part == "lin":
+                t.lin[i] += v
+            elif part == "quad":
+                t.quad[i if nb else pair_index(i, j, d_num)] += v
+            elif r["k1"] is not None and (part != "quad_cat" or r["k2"] is not None):
+                if part == "lin_cat":
+                    m, key = t.lin_cat[i], int(r["k1"])
+                elif part == "quad_num_cat":
+                    m, key = t.quad_num_cat[i * d_cat + j], int(r["k1"])
+                else:
+                    m, key = t.quad_cat[pair_index(i, j, d_cat)], (int(r["k1"]), int(r["k2"]))
+                m[key] = m.get(key, 0.0) + v
+        return t
+
     # -- export ------------------------------------------------------------
 
     def to_dict(self, lin_name: str = "lin_agg", quad_name: str = "quad_agg") -> dict:

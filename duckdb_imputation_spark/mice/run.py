@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from ..functions.triple import Triple
 from ..ml.lda import lda_train
 from ..ml.linreg import linreg_train
-from ..operators.cofactor import sum_to_triple
+from ..operators.flatten import triple_entries
 from .partition import column_stats, flag_and_fill, null_flag
 
 __all__ = ["mice_impute", "MiceResult"]
@@ -54,10 +54,8 @@ class MiceResult:
 def _collect_triple(
     df: DataFrame, cont_cols: Sequence[str], cat_cols: Sequence[str]
 ) -> Triple:
-    row = sum_to_triple(df, cont_cols, cat_cols).collect()
-    if not row:
-        return Triple.zero(len(cont_cols), len(cat_cols))
-    return Triple.from_row(row[0]["triple"], d_num=len(cont_cols), d_cat=len(cat_cols))
+    rows = triple_entries(df, cont_cols, cat_cols).collect()
+    return Triple.from_entries(rows, len(cont_cols), len(cat_cols))
 
 
 def mice_impute(

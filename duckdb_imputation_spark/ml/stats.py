@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 
 from ..functions.triple import Triple, pair_index
 from ..operators.cofactor import sum_to_triple
+from ..operators.flatten import triple_entries
 
 __all__ = [
     "second_order_stats",
@@ -42,12 +43,7 @@ def second_order_stats(
     of ``cols`` are excluded (lift semantics)."""
     cols = list(cols)
     d = len(cols)
-    row = sum_to_triple(df.dropna(subset=cols), cols, []).collect()
-    t = (
-        Triple.from_row(row[0]["triple"], d_num=d, d_cat=0)
-        if row
-        else Triple.zero(d, 0)
-    )
+    t = Triple.from_entries(triple_entries(df.dropna(subset=cols), cols).collect(), d, 0)
     n = int(t.n)
     if n == 0:
         return 0, np.zeros(d), np.zeros((d, d))

@@ -15,29 +15,35 @@ Execution strategy (designed for 100 TB, not just small SF):
   reference's SumState update/combine (sum_state.cpp:10-114), with the
   map-side combine reducing shuffle traffic to one partial row per
   (partition × group).
-* **Sparse categorical part**: one ``posexplode`` producing (cat_idx, key)
-  entries, aggregated by (group, cat_idx, key).  Shuffle volume is bounded
-  by Σ|categories| per group *after* map-side partial aggregation, never by
-  row count.  Category-pair co-occurrences get the same treatment over the
-  c(c+1)/2 pair list.  Maps are then assembled per group with
-  ``collect_list`` (bounded by the category dictionary size, which the
-  reference also assumes driver-resident, partition.cpp:34-37).
+* **Sparse categorical part**: one tagged ``explode`` producing (cat_idx,
+  key) entries, aggregated by (group, cat_idx, key).  Shuffle volume is
+  bounded by Σ|categories| per group *after* map-side partial
+  aggregation, never by row count.  Category-pair co-occurrences get the
+  same treatment over the c(c+1)/2 pair list.
+
+Output form: the builder (:func:`_cofactor_entries`) returns flat entry
+rows ``(group..., part, i, j, k1, k2, val)`` — each per-key aggregate row
+emits its own entries with one generate, so the flat result needs no
+per-group assembly and no second shuffle.  The nested struct is built
+only at the API edge: :func:`sum_to_triple` with categorical columns is
+:func:`~.flatten.unflatten_triple` over those entries (one more
+grouping), and driver consumers fold the collected entries with
+:meth:`~..functions.triple.Triple.from_entries`.
 
 Physical paths, each picked from the input shape alone (all return the
 same values):
 
-* :func:`sum_to_triple` with no categorical column — the dense aggregate
-  alone, one codegen'd hash aggregation.
-* :func:`sum_to_triple`, narrow shape (fan-out × quads ≤
-  ``_FUSE_DENSE_MAX``) — the dense stats ride the sparse two-level
-  aggregation as one extra pseudo-entry: one scan, no join.
-* :func:`sum_to_triple`, wide shape — a dedicated dense aggregate joined
-  to the sparse one on the (null-safe) group keys: two scans, but the
-  quad products run once per row instead of once per exploded entry.
+* no categorical column — the dense aggregate alone, one codegen'd hash
+  aggregation (nested: the struct built straight from it).
+* narrow shape (fan-out × quads ≤ ``_FUSE_DENSE_MAX``) — the dense stats
+  ride the per-key aggregation as one extra pseudo-entry: one scan.
+* wide shape — a dedicated dense aggregate's entries are unioned with
+  the sparse entries: two scans, but the quad products run once per row
+  instead of once per exploded entry.
 * :func:`_sum_to_triple_collect` — one ``groupBy`` that collects each
   group's rows and assembles the maps with higher-order functions.  Only
   :func:`~.multiply.triple_over_join` uses it, for its per-join-key sides,
-  where groups are tiny and it saves two shuffles and a join.
+  where groups are tiny and ⊗ needs nested per-key operands.
 * :func:`sum_triples` — ⊕ over a column of triples: lower to flat entries,
   one grouped sum, optional nested reassembly
   (:func:`~.flatten.unflatten_triple`).
@@ -73,37 +79,14 @@ _COLLECT_FOLD_MIN_ROWS = 64
 # Fused-dense cutover (r13, re-validated r14): the single-scan fused
 # cofactor gates d(d+1)/2 quad products on each of the (fan + 1)
 # exploded entries per row, so its per-row overhead is ~fan × quads;
-# above this product the two-scan plan (dedicated dense aggregate +
-# broadcast join) wins.  Both branches are value-identical.
+# above this product the two-scan plan (dedicated dense aggregate whose
+# entries are unioned with the sparse ones) wins.  Both branches are
+# value-identical.
 _FUSE_DENSE_MAX = 96
 
 
 def _empty(array_t: str) -> Column:
     return F.expr("array()").cast(array_t)
-
-
-def _join_on(left: DataFrame, right: DataFrame, keys: Sequence[str]) -> DataFrame:
-    # Rename the right side's keys first: both sides usually derive from the
-    # same base plan, and Spark's self-join attribute resolution would make
-    # ``left[k] == right[k]`` ambiguous otherwise.
-    renamed = right
-    for k in keys:
-        renamed = renamed.withColumnRenamed(k, f"__rhs_{k}")
-    if not keys or list(keys) == ["__g"]:
-        # keyless combine, or the internal constant dummy key ("__g" =
-        # lit(0)): both sides are SINGLE-ROW global aggregates, and
-        # Catalyst constant-folds the dummy-key equality to TRUE — an
-        # unhinted join then plans as CartesianProduct under the
-        # measured-sizes broadcast posture (session.py, r9).
-        # Broadcast the 1-row side explicitly.
-        out = left.join(F.broadcast(renamed), F.lit(True), "inner")
-        return out.drop(*[f"__rhs_{k}" for k in keys])
-    cond = None
-    for k in keys:
-        c = F.col(k).eqNullSafe(F.col(f"__rhs_{k}"))
-        cond = c if cond is None else cond & c
-    out = left.join(renamed, cond, "inner")
-    return out.drop(*[f"__rhs_{k}" for k in keys])
 
 
 def _quad_pairs(d: int, nb: bool) -> list[tuple[int, int]]:
@@ -149,16 +132,9 @@ def _dense_aggs(d: int, quad_idx: list[tuple[int, int]]) -> list[Column]:
     return aggs
 
 
-def _dense_fields(
-    d: int,
-    n_quads: int,
-    n: str = "__n",
-    lin: str = "__lin_{}",
-    quad: str = "__quad_{}",
-) -> list[Column]:
-    """The ``N, lin_agg, quad_agg`` struct fields, read from the SQL
-    values ``n``, ``lin.format(i)`` and ``quad.format(p)`` (by default
-    the :func:`_dense_aggs` columns); NULL sums read as 0."""
+def _dense_fields(d: int, n_quads: int) -> list[Column]:
+    """The ``N, lin_agg, quad_agg`` struct fields, read from the
+    :func:`_dense_aggs` columns; NULL sums read as 0."""
 
     def arr(vals: list[str]) -> Column:
         if not vals:
@@ -166,9 +142,9 @@ def _dense_fields(
         return F.expr("array(" + ", ".join(f"coalesce({v}, 0.0d)" for v in vals) + ")")
 
     return [
-        F.expr(n).alias("N"),
-        arr([lin.format(i) for i in range(d)]).alias("lin_agg"),
-        arr([quad.format(p) for p in range(n_quads)]).alias("quad_agg"),
+        F.col("__n").alias("N"),
+        arr([f"__lin_{i}" for i in range(d)]).alias("lin_agg"),
+        arr([f"__quad_{p}" for p in range(n_quads)]).alias("quad_agg"),
     ]
 
 
@@ -177,6 +153,163 @@ def _finish(
 ) -> DataFrame:
     out = src.select(*group_by, F.struct(*fields).alias(result_col))
     return out.drop("__g") if keyless else out
+
+
+def _ent(part: str, i, j, k1, k2, val) -> str:
+    """SQL for one flat entry struct ``(part, i, j, k1, k2, val)`` — the
+    row layout of :func:`~.flatten.triple_entries`; each argument after
+    ``part`` is an SQL expression."""
+    return (
+        f"named_struct('part', '{part}', 'i', CAST({i} AS INT), "
+        f"'j', CAST({j} AS INT), 'k1', CAST({k1} AS INT), "
+        f"'k2', CAST({k2} AS INT), 'val', CAST({val} AS DOUBLE))"
+    )
+
+
+def _dense_entries(d: int, quad_idx: list[tuple[int, int]]) -> list[str]:
+    """The ``N``, ``lin`` and ``quad`` entries of a row carrying the
+    :func:`_dense_aggs` columns; NULL sums read as 0."""
+    out = [_ent("N", -1, -1, -1, -1, "__n")]
+    out += [_ent("lin", i, -1, -1, -1, f"coalesce(__lin_{i}, 0.0d)") for i in range(d)]
+    out += [
+        _ent("quad", i, j, -1, -1, f"coalesce(__quad_{p}, 0.0d)")
+        for p, (i, j) in enumerate(quad_idx)
+    ]
+    return out
+
+
+def _cofactor_entries(
+    df: DataFrame,
+    num_cols: list[str],
+    cat_cols: list[str],
+    group_by: list[str],
+    nb: bool,
+    max_categories: int | None,
+) -> DataFrame:
+    """The cofactor builder: the (grouped) cofactor of ``df`` as flat
+    entry rows ``group_by..., part, i, j, k1, k2, val`` — one row per
+    statistic, NULL sums read as 0.  No group key gives no row for an
+    empty input."""
+    d, c = len(num_cols), len(cat_cols)
+    base, group_by, keyless = _project(df, num_cols, cat_cols, group_by)
+
+    if max_categories is not None and c > 0:
+        # Opt-in scale guard: the categorical maps (and the driver-side
+        # dictionaries the ML path builds from them, partition.cpp:34-37)
+        # are only safe for bounded-cardinality columns.  One cheap
+        # approx-distinct scan up front beats an executor OOM later.
+        counts = df.agg(
+            *[F.approx_count_distinct(col).alias(col) for col in cat_cols]
+        ).collect()[0]
+        bad = {col: counts[col] for col in cat_cols if counts[col] > max_categories}
+        if bad:
+            raise ValueError(
+                f"categorical columns exceed max_categories={max_categories}: "
+                f"{bad} — these look like IDs, not categories"
+            )
+
+    quad_idx = _quad_pairs(d, nb)
+    n_pairs = len(cat_pairs(c)) if not nb else 0
+    fan = c + n_pairs  # sparse entries per input row
+
+    # Fused single-scan shape (r13, guide §2.4 — remove passes/shuffles
+    # outright): the dense stats ride as ONE extra tagged pseudo-entry
+    # (kind 2) through the same explode → per-key aggregation, removing
+    # a second full scan of the input.  Value-identical: the kind-2
+    # group receives exactly one entry per input row in row order, so
+    # its count/sums accumulate exactly as the dedicated dense aggregate
+    # does.  The fused aggregate gates the d(d+1)/2 quad products per
+    # exploded entry, so its overhead grows with fan-out × quad width;
+    # measured at sf0.1 it wins for narrow shapes (3 num × 2 cat: ~2 s →
+    # ~1 s noop) and loses for the wide one (8 num × 4 cat: 2.3 s → 5.5 s
+    # — 14 sparse entries × 44 gated quads beat the saved scan).  The
+    # data-independent criterion below picks fused exactly when the
+    # per-entry gating work is small; either branch returns the same
+    # rows, only the plan differs.
+    fuse_dense = c > 0 and fan * max(len(quad_idx), 1) <= _FUSE_DENSE_MAX
+    # the wide shape's dense entries: a dedicated aggregate (second scan)
+    # whose quad products run once per input row with no per-entry gating
+    dense = None
+    if not fuse_dense:
+        dense = base.groupBy(*group_by).agg(*_dense_aggs(d, quad_idx)).select(
+            *group_by,
+            F.inline(F.expr("array(" + ", ".join(_dense_entries(d, quad_idx)) + ")")),
+        )
+    if c == 0:
+        return dense.drop("__g") if keyless else dense
+
+    # ---- sparse per-key aggregation: one tagged explode, one groupBy ----
+    # kind 0: (cat j, key); kind 1: (cat pair a*c+b, key1, key2);
+    # kind 2: the fused dense pseudo-entry
+    def _estruct(kind: int, idx: int, e1: str, e2: str) -> str:
+        return (
+            f"named_struct('__kind', {kind}, '__idx', CAST({idx} AS INT), "
+            f"'__e1', {e1}, '__e2', {e2})"
+        )
+
+    entry_sqls = [_estruct(2, 0, "0", "0")] if fuse_dense else []
+    entry_sqls += [_estruct(0, j, f"__k{j}", "0") for j in range(c)]
+    if not nb:
+        entry_sqls += [_estruct(1, a * c + b, f"__k{a}", f"__k{b}") for a, b in cat_pairs(c)]
+    carry_sums = d > 0 and not nb
+    carry_x = [F.col(f"__x{i}") for i in range(d)] if (carry_sums or fuse_dense) else []
+    exploded = base.select(
+        *group_by,
+        *carry_x,
+        F.explode(F.expr("array(" + ", ".join(entry_sqls) + ")")).alias("__e"),
+    ).select(
+        *group_by,
+        *carry_x,
+        F.col("__e.__kind").alias("__kind"),
+        F.col("__e.__idx").alias("__idx"),
+        F.col("__e.__e1").alias("__e1"),
+        F.col("__e.__e2").alias("__e2"),
+    )
+    # per-key count and sums, named as the dense aggregate's: linear sums
+    # are needed on kind-0 entries when carry_sums (Σx_i per key) and on
+    # the kind-2 entry (Σx_i); quad products only on kind-2 (gated so the
+    # multiplies run once per input row, not once per sparse copy)
+    dense_kind = F.col("__kind") == 2
+    sum_aggs = []
+    quad_aggs = []
+    if carry_sums:
+        sum_aggs = [F.sum(F.col(f"__x{i}")).alias(f"__lin_{i}") for i in range(d)]
+    elif fuse_dense and d:
+        sum_aggs = [
+            F.sum(F.when(dense_kind, F.col(f"__x{i}"))).alias(f"__lin_{i}")
+            for i in range(d)
+        ]
+    if fuse_dense:
+        quad_aggs = [
+            F.sum(
+                F.when(dense_kind, F.col(f"__x{i}") * F.col(f"__x{j}"))
+            ).alias(f"__quad_{p}")
+            for p, (i, j) in enumerate(quad_idx)
+        ]
+    per_key = exploded.groupBy(*group_by, "__kind", "__idx", "__e1", "__e2").agg(
+        F.count(F.lit(1)).alias("__n"),
+        *sum_aggs,
+        *quad_aggs,
+    )
+
+    # each per-key row inlines its own entries (SQL text: one F.expr
+    # parse instead of a py4j round trip per sub-expression)
+    kinds = {
+        0: [_ent("lin_cat", "__idx", -1, "__e1", -1, "__n")]
+        + [
+            _ent("quad_num_cat", i, "__idx", "__e1", -1, f"coalesce(__lin_{i}, 0.0d)")
+            for i in range(d if carry_sums else 0)
+        ]
+    }
+    if not nb:
+        kinds[1] = [_ent("quad_cat", f"__idx div {c}", f"__idx % {c}", "__e1", "__e2", "__n")]
+    if fuse_dense:
+        kinds[2] = _dense_entries(d, quad_idx)
+    emit = " ".join(f"WHEN {k} THEN array({', '.join(e)})" for k, e in kinds.items())
+    entries = per_key.select(*group_by, F.inline(F.expr(f"CASE __kind {emit} END")))
+    if dense is not None:
+        entries = dense.union(entries)
+    return entries.drop("__g") if keyless else entries
 
 
 def sum_to_triple(
@@ -202,181 +335,31 @@ def sum_to_triple(
     (struct shaped like :func:`~duckdb_imputation_spark.functions.triple
     .triple_schema`).
     """
-    num_cols = list(num_cols)
-    cat_cols = list(cat_cols)
+    from .flatten import unflatten_triple  # avoid a cycle
+
+    num_cols, cat_cols, group_by = list(num_cols), list(cat_cols), list(group_by)
     d, c = len(num_cols), len(cat_cols)
-    base, group_by, keyless = _project(df, num_cols, cat_cols, list(group_by))
+    if c:
+        entries = _cofactor_entries(df, num_cols, cat_cols, group_by, nb, max_categories)
+        # the entry columns (part, i, j, ...) may share a group key's name:
+        # assemble over positional stand-ins, then restore the names
+        keys = [f"__gb{n}" for n in range(len(group_by))]
+        entries = entries.toDF(*keys, "part", "i", "j", "k1", "k2", "val")
+        nested = unflatten_triple(entries, d, c, keys, nb=nb, result_col=result_col)
+        return nested.toDF(*group_by, result_col)
 
-    if max_categories is not None and c > 0:
-        # Opt-in scale guard: the categorical maps (and the driver-side
-        # dictionaries the ML path builds from them, partition.cpp:34-37)
-        # are only safe for bounded-cardinality columns.  One cheap
-        # approx-distinct scan up front beats an executor OOM later.
-        counts = df.agg(
-            *[F.approx_count_distinct(col).alias(col) for col in cat_cols]
-        ).collect()[0]
-        bad = {col: counts[col] for col in cat_cols if counts[col] > max_categories}
-        if bad:
-            raise ValueError(
-                f"categorical columns exceed max_categories={max_categories}: "
-                f"{bad} — these look like IDs, not categories"
-            )
-
+    # ---- dense-only: pure codegen'd partial+final hash aggregation ---
+    base, group_by, keyless = _project(df, num_cols, cat_cols, group_by)
     quad_idx = _quad_pairs(d, nb)
-    if c == 0:
-        # ---- dense-only: pure codegen'd partial+final hash aggregation ---
-        fields = _dense_fields(d, len(quad_idx))
-        fields.append(_empty(f"array<{_KV_T}>").alias("lin_cat"))
-        if not nb:
-            fields += [
-                _empty(f"array<{_KV_T}>").alias("quad_num_cat"),
-                _empty(f"array<{_KKV_T}>").alias("quad_cat"),
-            ]
-        dense = base.groupBy(*group_by).agg(*_dense_aggs(d, quad_idx))
-        return _finish(dense, group_by, keyless, fields, result_col)
-
-    # ---- sparse (+ optionally dense) two-level aggregation ---------------
-    carry_sums = d > 0 and not nb
-    n_pairs = len(cat_pairs(c)) if not nb else 0
-    fan = c + n_pairs  # sparse entries per input row
-
-    # Fused single-scan shape (r13, guide §2.4 — remove passes/shuffles
-    # outright): the dense stats ride as ONE extra tagged pseudo-entry
-    # (kind 2) through the same explode → two-level aggregation,
-    # removing the second full scan of the input and the dense⋈sparse
-    # join.  Value-identical: the kind-2 group receives exactly one
-    # entry per input row in row order, so its count/sums accumulate
-    # exactly as the dedicated dense aggregate did.  The fused
-    # aggregate gates the d(d+1)/2 quad products per exploded entry,
-    # so its overhead grows with fan-out × quad width; measured at
-    # sf0.1 it wins for narrow shapes (3 num × 2 cat: ~2 s → ~1 s
-    # noop) and loses for the wide one (8 num × 4 cat: 2.3 s → 5.5 s —
-    # 14 sparse entries × 44 gated quads beat the saved scan).  The
-    # data-independent criterion below picks fused exactly when the
-    # per-entry gating work is small; either branch returns the same
-    # values, only the plan differs.
-    fuse_dense = fan * max(len(quad_idx), 1) <= _FUSE_DENSE_MAX
-
-    def _estruct(kind: int, idx: int, e1: str, e2: str) -> str:
-        return (
-            f"named_struct('__kind', {kind}, '__idx', CAST({idx} AS INT), "
-            f"'__e1', {e1}, '__e2', {e2})"
-        )
-
-    entry_sqls = [_estruct(2, 0, "0", "0")] if fuse_dense else []
-    entry_sqls += [_estruct(0, j, f"__k{j}", "0") for j in range(c)]
-    if not nb:
-        entry_sqls += [
-            _estruct(1, p, f"__k{a}", f"__k{b}")
-            for p, (a, b) in enumerate(cat_pairs(c))
-        ]
-    carry_x = [F.col(f"__x{i}") for i in range(d)] if (carry_sums or fuse_dense) else []
-    exploded = base.select(
-        *group_by,
-        *carry_x,
-        F.explode(F.expr("array(" + ", ".join(entry_sqls) + ")")).alias("__e"),
-    ).select(
-        *group_by,
-        *carry_x,
-        F.col("__e.__kind").alias("__kind"),
-        F.col("__e.__idx").alias("__idx"),
-        F.col("__e.__e1").alias("__e1"),
-        F.col("__e.__e2").alias("__e2"),
-    )
-    dense_kind = F.col("__kind") == 2
-    # linear sums: needed on kind-0 entries when carry_sums (the
-    # num×cat maps) and on the kind-2 entry (lin_agg); quad products
-    # only on kind-2 (gated so the multiplies run once per input row,
-    # not once per sparse copy)
-    sum_aggs = []
-    quad_aggs = []
-    if carry_sums:
-        sum_aggs = [F.sum(F.col(f"__x{i}")).alias(f"__s{i}") for i in range(d)]
-    elif fuse_dense and d:
-        sum_aggs = [
-            F.sum(F.when(dense_kind, F.col(f"__x{i}"))).alias(f"__s{i}")
-            for i in range(d)
-        ]
-    if fuse_dense:
-        quad_aggs = [
-            F.sum(
-                F.when(dense_kind, F.col(f"__x{i}") * F.col(f"__x{j}"))
-            ).alias(f"__q{p}")
-            for p, (i, j) in enumerate(quad_idx)
-        ]
-    per_key = exploded.groupBy(*group_by, "__kind", "__idx", "__e1", "__e2").agg(
-        F.count(F.lit(1)).alias("__cnt"),
-        *sum_aggs,
-        *quad_aggs,
-    )
-    entries = per_key.groupBy(*group_by).agg(
-        F.collect_list(
-            F.struct(
-                "__kind",
-                "__idx",
-                "__e1",
-                "__e2",
-                "__cnt",
-                *[f"__s{i}" for i in range(len(sum_aggs))],
-                *[f"__q{p}" for p in range(len(quad_aggs))],
-            )
-        ).alias("__entries")
-    )
-
-    # assembly generated as SQL text: one F.expr parse instead of a py4j
-    # round trip per sub-expression (the Column-object version dominated
-    # wall clock at small scale factors)
-    def _single(j: int, value_field: str, cast: bool = False) -> str:
-        val = f"x.{value_field}"
-        if cast:
-            val = f"CAST({val} AS DOUBLE)"
-        return (
-            f"sort_array(transform(filter(__entries, x -> x.__kind = 0 AND "
-            f"x.__idx = {j}), x -> named_struct('key', x.__e1, 'value', "
-            f"coalesce({val}, CAST(0.0 AS DOUBLE)))))"
-        )
-
-    def _pair(p: int) -> str:
-        return (
-            f"sort_array(transform(filter(__entries, x -> x.__kind = 1 AND "
-            f"x.__idx = {p}), x -> named_struct('key1', x.__e1, 'key2', "
-            f"x.__e2, 'value', CAST(x.__cnt AS DOUBLE))))"
-        )
-
-    cat_fields = [
-        F.expr(
-            "array(" + ", ".join(_single(j, "__cnt", cast=True) for j in range(c)) + ")"
-        ).alias("lin_cat")
-    ]
-    if not nb:
-        cat_fields += [
-            (
-                F.expr(
-                    "array("
-                    + ", ".join(_single(j, f"__s{i}") for i in range(d) for j in range(c))
-                    + ")"
-                )
-                if carry_sums
-                else _empty(f"array<{_KV_T}>")
-            ).alias("quad_num_cat"),
-            F.expr(
-                "array(" + ", ".join(_pair(p) for p in range(len(cat_pairs(c)))) + ")"
-            ).alias("quad_cat"),
-        ]
-
-    if fuse_dense:
-        _dense_e = "element_at(filter(__entries, x -> x.__kind = 2), 1)"
-        fields = _dense_fields(
-            d, len(quad_idx), f"{_dense_e}.__cnt", f"{_dense_e}.__s{{}}", f"{_dense_e}.__q{{}}"
-        )
-        return _finish(entries, group_by, keyless, fields + cat_fields, result_col)
-
-    # wide shape: dedicated dense aggregate (second scan) + join — the
-    # quad products run once per input row with no per-entry gating
-    dense = base.groupBy(*group_by).agg(*_dense_aggs(d, quad_idx))
-    merged = _join_on(dense, entries, group_by)
     fields = _dense_fields(d, len(quad_idx))
-    return _finish(merged, group_by, keyless, fields + cat_fields, result_col)
+    fields.append(_empty(f"array<{_KV_T}>").alias("lin_cat"))
+    if not nb:
+        fields += [
+            _empty(f"array<{_KV_T}>").alias("quad_num_cat"),
+            _empty(f"array<{_KKV_T}>").alias("quad_cat"),
+        ]
+    dense = base.groupBy(*group_by).agg(*_dense_aggs(d, quad_idx))
+    return _finish(dense, group_by, keyless, fields, result_col)
 
 
 def lift_columns(
@@ -741,16 +724,8 @@ def sum_to_triples_conditional(
     tagged = df.withColumn(
         "__cond", F.explode(F.filter(tags, lambda x: x.isNotNull()))
     )
-    rows = {
-        r["__cond"]: r["triple"]
-        for r in sum_to_triple(
-            tagged, num_cols, cat_cols, group_by=["__cond"], nb=nb
-        ).collect()
-    }
-    d, c = len(num_cols), len(cat_cols)
-    return [
-        Triple.from_row(rows[i], d_num=d, d_cat=c)
-        if i in rows
-        else Triple.zero(d, c, nb=nb)
-        for i in range(len(conds))
-    ]
+    num_cols, cat_cols = list(num_cols), list(cat_cols)
+    rows = [[] for _ in conds]
+    for r in _cofactor_entries(tagged, num_cols, cat_cols, ["__cond"], nb, None).collect():
+        rows[r["__cond"]].append(r)
+    return [Triple.from_entries(r, len(num_cols), len(cat_cols), nb=nb) for r in rows]

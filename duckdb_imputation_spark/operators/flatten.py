@@ -9,7 +9,7 @@ hash-compare against another engine.  ``triple_entries`` lowers a
     part='N'             i=j=k1=k2=-1          val = row count
     part='lin'           i = num idx           val = Σ x_i
     part='quad'          (i,j) num pair        val = Σ x_i x_j
-    part='lin_cat'       j = cat idx, k1 = key val = count
+    part='lin_cat'       i = cat idx, k1 = key val = count
     part='quad_num_cat'  i = num, j = cat, k1  val = Σ x_i | cat_j = k1
     part='quad_cat'      (i,j) cat pair, k1,k2 val = co-occurrence count
 
@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.triple import cat_pairs
-from .cofactor import _KKV_T, _KV_T, _empty, _quad_pairs, sum_to_triple
+from .cofactor import _KKV_T, _KV_T, _cofactor_entries, _empty, _ent, _quad_pairs
 
 __all__ = ["triple_entries", "triple_entries_sql", "flatten_triple", "unflatten_triple"]
 
@@ -53,11 +53,9 @@ def triple_entries(
     group_by: Sequence[str] = (),
     nb: bool = False,
 ) -> DataFrame:
-    """Cofactor over ``df`` flattened to entry rows (one aggregation pass,
-    then a single generate — no re-scan per statistic)."""
-    num_cols, cat_cols, group_by = list(num_cols), list(cat_cols), list(group_by)
-    t = sum_to_triple(df, num_cols, cat_cols, group_by=group_by, nb=nb)
-    return flatten_triple(t, len(num_cols), len(cat_cols), group_by, nb=nb)
+    """Cofactor over ``df`` as entry rows: each per-key aggregate row
+    emits its own entries, with no nested triple in between."""
+    return _cofactor_entries(df, list(num_cols), list(cat_cols), list(group_by), nb, None)
 
 
 def flatten_triple(
@@ -78,26 +76,19 @@ def flatten_triple(
     group_by = list(group_by)
     tc = triple_col
 
-    def ent(part: str, i: int, j: int, k1: str, k2: str, val: str) -> str:
-        return (
-            f"named_struct('part', '{part}', 'i', CAST({i} AS INT), "
-            f"'j', CAST({j} AS INT), 'k1', CAST({k1} AS INT), "
-            f"'k2', CAST({k2} AS INT), 'val', CAST({val} AS DOUBLE))"
-        )
-
-    arrays = [f"array({ent('N', -1, -1, '-1', '-1', f'{tc}.N')})"]
+    arrays = [f"array({_ent('N', -1, -1, '-1', '-1', f'{tc}.N')})"]
     for i in range(d):
         arrays.append(
-            f"array({ent('lin', i, -1, '-1', '-1', f'{tc}.lin_agg[{i}]')})"
+            f"array({_ent('lin', i, -1, '-1', '-1', f'{tc}.lin_agg[{i}]')})"
         )
     for p, (i, j) in enumerate(_quad_pairs(d, nb)):
         arrays.append(
-            f"array({ent('quad', i, j, '-1', '-1', f'{tc}.quad_agg[{p}]')})"
+            f"array({_ent('quad', i, j, '-1', '-1', f'{tc}.quad_agg[{p}]')})"
         )
     for j in range(c):
         arrays.append(
             f"transform({tc}.lin_cat[{j}], e -> "
-            + ent("lin_cat", j, -1, "e.key", "-1", "e.value")
+            + _ent("lin_cat", j, -1, "e.key", "-1", "e.value")
             + ")"
         )
     if not nb:
@@ -105,13 +96,13 @@ def flatten_triple(
             for j in range(c):
                 arrays.append(
                     f"transform({tc}.quad_num_cat[{i * c + j}], e -> "
-                    + ent("quad_num_cat", i, j, "e.key", "-1", "e.value")
+                    + _ent("quad_num_cat", i, j, "e.key", "-1", "e.value")
                     + ")"
                 )
         for p, (a, b) in enumerate(cat_pairs(c)):
             arrays.append(
                 f"transform({tc}.quad_cat[{p}], e -> "
-                + ent("quad_cat", a, b, "e.key1", "e.key2", "e.value")
+                + _ent("quad_cat", a, b, "e.key1", "e.key2", "e.value")
                 + ")"
             )
     entries_sql = "concat(" + ", ".join(arrays) + ")" if len(arrays) > 1 else arrays[0]

@@ -19,7 +19,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 
 from ..functions.triple import Triple
-from .cofactor import sum_to_triple
+from .flatten import triple_entries
 
 __all__ = ["IncrementalCofactor"]
 
@@ -43,13 +43,9 @@ class IncrementalCofactor:
         self.triple = Triple.zero(len(self.num_cols), len(self.cat_cols), nb=nb)
 
     def _aggregate(self, df: DataFrame) -> Triple:
-        rows = sum_to_triple(df, self.num_cols, self.cat_cols, nb=self.nb).collect()
-        if not rows:
-            return Triple.zero(len(self.num_cols), len(self.cat_cols), nb=self.nb)
-        return Triple.from_row(
-            rows[0]["triple"],
-            d_num=len(self.num_cols),
-            d_cat=len(self.cat_cols),
+        rows = triple_entries(df, self.num_cols, self.cat_cols, nb=self.nb).collect()
+        return Triple.from_entries(
+            rows, len(self.num_cols), len(self.cat_cols), nb=self.nb
         )
 
     def insert(self, delta: DataFrame) -> "IncrementalCofactor":

@@ -648,8 +648,7 @@ def linreg_via_triple_vs_regr(spark, sf):
     caught by oracle_margin the round this row rotated back into the
     driver window, same discipline as grouped_covariance r7)."""
     li = _li(spark, sf).withColumn("x", F.dayofmonth("l_shipdate").cast("double"))
-    row = sum_to_triple(li, ["l_quantity", "x"]).collect()[0]["triple"]
-    t = Triple.from_row(row)
+    t = Triple.from_entries(triple_entries(li, ["l_quantity", "x"]).collect(), 2, 0)
     m = linreg_train(t, label=0, method="closed")
     return spark.createDataFrame(
         [(round(m.coef_num[0], 4) + 0.0, round(m.intercept, 4) + 0.0)], "slope double, intercept double"
@@ -4042,9 +4041,7 @@ def lda_train_predict_histogram(spark, sf):
         F.round(F.col("l_tax") * 100).cast("double").alias("tax"),
         F.col("l_linenumber").alias("ln"),
     )
-    t = Triple.from_row(
-        sum_to_triple(li, ["q", "disc", "tax"], ["ln"]).collect()[0]["triple"]
-    )
+    t = Triple.from_entries(triple_entries(li, ["q", "disc", "tax"], ["ln"]).collect(), 3, 1)
     model = lda_train(t, label=0)
     return (
         li.withColumn("pred", model.predict_expr(["q", "disc", "tax"], []))

@@ -10,9 +10,10 @@ cofactor into a streaming operator:
   with a watermark for late data; dense parts are plain streaming sums
   (incremental state per window), categorical parts are streamed in
   entry form (part,i,j,k1,k2,val) so state stays bounded per key.
-* :func:`merge_stream_triples` — fold a micro-batch (or the complete
-  output) of entry rows into a driver-side :class:`Triple` via ⊕ —
-  e.g. in ``foreachBatch`` to keep a live model fresh.
+* :meth:`~duckdb_imputation_spark.functions.triple.Triple.from_entries`
+  folds a micro-batch (or the complete output) of those entry rows into
+  a driver-side triple via ⊕ — e.g. in ``foreachBatch`` to keep a live
+  model fresh.
 
 Entry-form streaming is the scale-safe choice: per-window state is one
 row per (window, statistic) after partial aggregation, never per input
@@ -27,11 +28,11 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.triple import Triple, cat_pairs
+from ..operators.cofactor import lift_columns
+from ..operators.flatten import flatten_triple
 
 __all__ = [
     "streaming_triple_parts",
-    "merge_stream_triples",
     "streaming_exact_dedup",
     "streaming_corpus_stats",
     "corpus_stats_batch",
@@ -59,51 +60,14 @@ def streaming_triple_parts(
     reference, which has no notion of late data).
     """
     num_cols, cat_cols, group_by = list(num_cols), list(cat_cols), list(group_by)
-    d, c = len(num_cols), len(cat_cols)
-    wm = stream.withWatermark(ts_col, watermark)
-    win = F.window(F.col(ts_col), window)
-
-    entry_structs = [
-        F.struct(
-            F.lit("N").alias("part"),
-            F.lit(-1).cast("int").alias("i"),
-            F.lit(-1).cast("int").alias("j"),
-            F.lit(-1).cast("int").alias("k1"),
-            F.lit(-1).cast("int").alias("k2"),
-            F.lit(1.0).alias("val"),
-        )
-    ]
-    xs = [F.col(col).cast("double") for col in num_cols]
-    ks = [F.col(col).cast("int") for col in cat_cols]
-
-    def ent(part, i, j, k1, k2, val):
-        return F.struct(
-            F.lit(part).alias("part"),
-            F.lit(i).cast("int").alias("i"),
-            F.lit(j).cast("int").alias("j"),
-            (k1 if not isinstance(k1, int) else F.lit(k1)).cast("int").alias("k1"),
-            (k2 if not isinstance(k2, int) else F.lit(k2)).cast("int").alias("k2"),
-            val.alias("val"),
-        )
-
-    for i in range(d):
-        entry_structs.append(ent("lin", i, -1, -1, -1, xs[i]))
-    for i in range(d):
-        for j in range(i, d):
-            entry_structs.append(ent("quad", i, j, -1, -1, xs[i] * xs[j]))
-    for j in range(c):
-        entry_structs.append(ent("lin_cat", j, -1, ks[j], -1, F.lit(1.0)))
-    for i in range(d):
-        for j in range(c):
-            entry_structs.append(ent("quad_num_cat", i, j, ks[j], -1, xs[i]))
-    for a, b in cat_pairs(c):
-        entry_structs.append(ent("quad_cat", a, b, ks[a], ks[b], F.lit(1.0)))
-
-    exploded = wm.select(
-        win.alias("__w"), *group_by, F.inline(F.array(*entry_structs))
+    lifted = stream.withWatermark(ts_col, watermark).select(
+        F.window(F.col(ts_col), window).alias("__w"),
+        *group_by,
+        lift_columns(num_cols, cat_cols).alias("triple"),
     )
     return (
-        exploded.groupBy("__w", *group_by, "part", "i", "j", "k1", "k2")
+        flatten_triple(lifted, len(num_cols), len(cat_cols), ["__w", *group_by])
+        .groupBy("__w", *group_by, "part", "i", "j", "k1", "k2")
         .agg(F.sum("val").alias("val"))
         .select(
             F.col("__w.start").alias("window_start"),
@@ -117,36 +81,6 @@ def streaming_triple_parts(
             "val",
         )
     )
-
-
-def merge_stream_triples(rows, d_num: int, d_cat: int) -> Triple:
-    """Fold collected entry rows (any order, any duplication of windows)
-    into one driver-side Triple via ⊕."""
-    t = Triple.zero(d_num, d_cat)
-    for r in rows:
-        part, i, j = r["part"], r["i"], r["j"]
-        v = float(r["val"])
-        if part == "N":
-            t.n += int(v)
-        elif part == "lin":
-            t.lin[i] += v
-        elif part == "quad":
-            from ..functions.triple import pair_index
-
-            t.quad[pair_index(i, j, d_num)] += v
-        elif part == "lin_cat":
-            m = t.lin_cat[i]
-            m[r["k1"]] = m.get(r["k1"], 0.0) + v
-        elif part == "quad_num_cat":
-            m = t.quad_num_cat[i * d_cat + j]
-            m[r["k1"]] = m.get(r["k1"], 0.0) + v
-        elif part == "quad_cat":
-            from ..functions.triple import pair_index
-
-            m = t.quad_cat[pair_index(i, j, d_cat)]
-            key = (r["k1"], r["k2"])
-            m[key] = m.get(key, 0.0) + v
-    return t
 
 
 def _corpus_stat_exprs(text_col: str):

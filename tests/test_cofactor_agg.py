@@ -109,6 +109,23 @@ def test_group_with_null_key(spark):
     assert got[None]["lin_cat"] == [[{"key": 3, "value": 2.0}]]
 
 
+@pytest.mark.parametrize("key", ["i", "val"])
+def test_group_key_named_like_an_entry_column(ring_fixture, key):
+    """The nested triple is assembled from flat entry rows
+    (part, i, j, k1, k2, val): a group key of the same name is kept
+    apart from them."""
+    named = sum_to_triple(
+        ring_fixture.withColumnRenamed("gb", key), NUM, CAT, group_by=[key]
+    )
+    assert named.columns == [key, "triple"]
+    got = {r[key]: triple_dict(r["triple"]) for r in named.collect()}
+    exp = {
+        r["gb"]: triple_dict(r["triple"])
+        for r in sum_to_triple(ring_fixture, NUM, CAT, group_by=["gb"]).collect()
+    }
+    assert got == exp
+
+
 def test_collect_strategy_matches_twolevel(spark, ring_fixture):
     """The collect builder (small-groups path) must agree with the
     two-level path, nested triples and map order included."""

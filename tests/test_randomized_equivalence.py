@@ -11,6 +11,7 @@ from duckdb_imputation_spark.operators.cofactor import (
     _sum_to_triple_collect,
     sum_to_triple,
 )
+from duckdb_imputation_spark.operators.flatten import triple_entries
 
 RNG = np.random.default_rng(123)
 
@@ -52,7 +53,12 @@ def close(a: Triple, b: Triple):
             assert abs(m1[k] - m2[k]) < 1e-6 + 1e-9 * abs(m1[k])
 
 
-@pytest.mark.parametrize("d,c,nb", [(1, 1, False), (3, 2, False), (2, 3, True), (4, 0, False), (0, 2, False)])
+# (8, 4): fan-out × quads = 14 × 36 > _FUSE_DENSE_MAX, the two-scan union
+# shape; (4, 0) is the dense aggregate alone, the rest the fused single scan
+@pytest.mark.parametrize(
+    "d,c,nb",
+    [(1, 1, False), (3, 2, False), (2, 3, True), (4, 0, False), (0, 2, False), (8, 4, False)],
+)
 @pytest.mark.parametrize("strategy", ["twolevel", "collect"])
 def test_spark_agg_equals_python_algebra(spark, d, c, nb, strategy):
     if strategy == "collect" and c == 0:
@@ -65,6 +71,15 @@ def test_spark_agg_equals_python_algebra(spark, d, c, nb, strategy):
     got = {r["g"]: Triple.from_row(r["triple"], d_num=d, d_cat=c) for r in out.collect()}
     for g in got:
         close(got[g], python_agg(rows, d, c, group=g, nb=nb))
+    if strategy == "twolevel":
+        # the flat entry rows, folded on the driver, give the same triples
+        entries = triple_entries(df, num, cat, group_by=["g"], nb=nb).collect()
+        assert {r["g"] for r in entries} == set(got)
+        for g in got:
+            folded = Triple.from_entries(
+                [r for r in entries if r["g"] == g], d, c, nb=nb
+            )
+            close(folded, python_agg(rows, d, c, group=g, nb=nb))
 
 
 def test_max_categories_guard(spark):

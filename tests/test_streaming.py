@@ -8,10 +8,7 @@ from pyspark.sql import functions as F
 
 from duckdb_imputation_spark.functions.triple import Triple
 from duckdb_imputation_spark.operators.cofactor import sum_to_triple
-from duckdb_imputation_spark.streaming import (
-    merge_stream_triples,
-    streaming_triple_parts,
-)
+from duckdb_imputation_spark.streaming import streaming_triple_parts
 
 
 @pytest.fixture()
@@ -48,7 +45,7 @@ def test_stream_matches_batch(spark, event_rows, tmp_path):
     assert len({r["window_start"] for r in got}) == 3
 
     # ⊕-fold all windows → must equal the batch cofactor over everything
-    t_stream = merge_stream_triples(got, 1, 1)
+    t_stream = Triple.from_entries(got, 1, 1)
     t_batch = Triple.from_row(
         sum_to_triple(event_rows, ["x"], ["k"]).collect()[0]["triple"]
     )
@@ -60,6 +57,43 @@ def test_stream_matches_batch(spark, event_rows, tmp_path):
         if r["part"] == "N":
             per_window[r["window_start"].hour] = int(r["val"])
     assert per_window == {0: 20, 1: 20, 2: 20}
+
+
+def test_entry_fold_drops_null_key_and_trains():
+    """Entry rows of x = [1, 2, 4, 3], k = [3, NULL, 5, 3], split over two
+    windows: the fold drops the NULL category key (as ``from_row`` does),
+    so the one-hot dictionary stays sortable and ``linreg_train`` runs."""
+    from duckdb_imputation_spark.ml.linreg import linreg_train
+
+    def e(part, i, j, k1, k2, val):
+        return {"part": part, "i": i, "j": j, "k1": k1, "k2": k2, "val": val}
+
+    windows = [
+        # rows (1, 3), (2, NULL)
+        [e("N", -1, -1, -1, -1, 2.0), e("lin", 0, -1, -1, -1, 3.0),
+         e("quad", 0, 0, -1, -1, 5.0),
+         e("lin_cat", 0, -1, 3, -1, 1.0), e("lin_cat", 0, -1, None, -1, 1.0),
+         e("quad_num_cat", 0, 0, 3, -1, 1.0), e("quad_num_cat", 0, 0, None, -1, 2.0),
+         e("quad_cat", 0, 0, 3, 3, 1.0), e("quad_cat", 0, 0, None, None, 1.0)],
+        # rows (4, 5), (3, 3)
+        [e("N", -1, -1, -1, -1, 2.0), e("lin", 0, -1, -1, -1, 7.0),
+         e("quad", 0, 0, -1, -1, 25.0),
+         e("lin_cat", 0, -1, 5, -1, 1.0), e("lin_cat", 0, -1, 3, -1, 1.0),
+         e("quad_num_cat", 0, 0, 5, -1, 4.0), e("quad_num_cat", 0, 0, 3, -1, 3.0),
+         e("quad_cat", 0, 0, 5, 5, 1.0), e("quad_cat", 0, 0, 3, 3, 1.0)],
+    ]
+    t = Triple.from_entries([r for w in windows for r in w], 1, 1)
+    assert t.to_dict() == {
+        "N": 4,
+        "lin_agg": [10.0],
+        "quad_agg": [30.0],
+        "lin_cat": [[{"key": 3, "value": 2.0}, {"key": 5, "value": 1.0}]],
+        "quad_num_cat": [[{"key": 3, "value": 4.0}, {"key": 5, "value": 4.0}]],
+        "quad_cat": [
+            [{"key1": 3, "key2": 3, "value": 2.0}, {"key1": 5, "key2": 5, "value": 1.0}]
+        ],
+    }
+    linreg_train(t, label=0)
 
 
 def test_late_data_within_watermark_counts(spark, tmp_path):
