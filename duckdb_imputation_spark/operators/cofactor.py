@@ -42,8 +42,10 @@ same values):
   instead of once per exploded entry.
 * :func:`_sum_to_triple_collect` — one ``groupBy`` that collects each
   group's rows and assembles the maps with higher-order functions.  Only
+  the factorized (many-to-many) path of
   :func:`~.multiply.triple_over_join` uses it, for its per-join-key sides,
-  where groups are tiny and ⊗ needs nested per-key operands.
+  where ⊗ needs nested per-key operands; a key-unique right side is
+  joined first and goes through :func:`_cofactor_entries` instead.
 * :func:`sum_triples` — ⊕ over a column of triples: lower to flat entries,
   one grouped sum, optional nested reassembly
   (:func:`~.flatten.unflatten_triple`).
@@ -64,6 +66,7 @@ __all__ = ["sum_to_triple", "sum_to_triples_conditional", "sum_triples", "lift_c
 
 _KV_T = "array<struct<key:int,value:double>>"
 _KKV_T = "array<struct<key1:int,key2:int,value:double>>"
+_ENTRY_COLS = ("part", "i", "j", "k1", "k2", "val")
 
 # Collect-path assembly gate (r14): groups with at most this many
 # collected rows build their categorical maps with the filter-per-key
@@ -97,12 +100,7 @@ def _quad_pairs(d: int, nb: bool) -> list[tuple[int, int]]:
     return [(i, j) for i in range(d) for j in range(i, d)]
 
 
-def _project(
-    df: DataFrame, num_cols: list[str], cat_cols: list[str], group_by: list[str]
-) -> tuple[DataFrame, list[str], bool]:
-    """Validate the column roles and project the aggregation input: the
-    group keys (the constant ``__g`` when ungrouped), ``__x{i}`` as double
-    and ``__k{j}`` as int.  Returns ``(base, group_by, keyless)``."""
+def _check_roles(num_cols: list[str], cat_cols: list[str], group_by: list[str]) -> None:
     overlap = set(num_cols) & set(cat_cols)
     if overlap:
         raise ValueError(
@@ -111,6 +109,26 @@ def _project(
     clash = (set(num_cols) | set(cat_cols)) & set(group_by)
     if clash:
         raise ValueError(f"group keys overlap aggregated columns: {sorted(clash)}")
+
+
+def _check_entry_keys(group_by: Sequence[str]) -> None:
+    """Entry rows carry the group keys beside ``part, i, j, k1, k2, val``;
+    a key of one of those names would make two columns of that name."""
+    clash = [g for g in group_by if g in _ENTRY_COLS]
+    if clash:
+        raise ValueError(
+            f"group keys {clash} share a name with the entry columns "
+            f"{list(_ENTRY_COLS)}; rename them first"
+        )
+
+
+def _project(
+    df: DataFrame, num_cols: list[str], cat_cols: list[str], group_by: list[str]
+) -> tuple[DataFrame, list[str], bool]:
+    """Validate the column roles and project the aggregation input: the
+    group keys (the constant ``__g`` when ungrouped), ``__x{i}`` as double
+    and ``__k{j}`` as int.  Returns ``(base, group_by, keyless)``."""
+    _check_roles(num_cols, cat_cols, group_by)
     keyless = not group_by
     if keyless:
         df = df.withColumn("__g", F.lit(0))
@@ -190,6 +208,7 @@ def _cofactor_entries(
     entry rows ``group_by..., part, i, j, k1, k2, val`` — one row per
     statistic, NULL sums read as 0.  No group key gives no row for an
     empty input."""
+    _check_entry_keys(group_by)
     d, c = len(num_cols), len(cat_cols)
     base, group_by, keyless = _project(df, num_cols, cat_cols, group_by)
 
@@ -340,11 +359,12 @@ def sum_to_triple(
     num_cols, cat_cols, group_by = list(num_cols), list(cat_cols), list(group_by)
     d, c = len(num_cols), len(cat_cols)
     if c:
-        entries = _cofactor_entries(df, num_cols, cat_cols, group_by, nb, max_categories)
+        _check_roles(num_cols, cat_cols, group_by)
         # the entry columns (part, i, j, ...) may share a group key's name:
-        # assemble over positional stand-ins, then restore the names
+        # aggregate over positional stand-ins, then restore the names
         keys = [f"__gb{n}" for n in range(len(group_by))]
-        entries = entries.toDF(*keys, "part", "i", "j", "k1", "k2", "val")
+        df = df.withColumns({k: F.col(g) for k, g in zip(keys, group_by)})
+        entries = _cofactor_entries(df, num_cols, cat_cols, keys, nb, max_categories)
         nested = unflatten_triple(entries, d, c, keys, nb=nb, result_col=result_col)
         return nested.toDF(*group_by, result_col)
 
@@ -539,7 +559,9 @@ def _sum_to_triple_collect(
     #     index) breaks ties inside a key, so each key's x values fold
     #     in __rows order — the same order filter() preserved — and the
     #     fold starts from the same CAST(0.0 AS DOUBLE) seed;
-    #   * counts stay exact (small-integer double increments).
+    #   * counts stay exact (small-integer double increments);
+    #   * a NULL x adds 0.0 in both forms, so a per-key sum skips it as
+    #     SQL SUM (and the materialized cofactor) does.
     # The per-key sums/counts themselves are what they always were; only
     # the assembly loop changed shape.
     _d_sums = 0 if nb else d
@@ -563,7 +585,7 @@ def _sum_to_triple_collect(
         return (
             f"transform({_col_keys(j)}, k -> named_struct('key', k, 'value', "
             f"aggregate(filter(__rows, e -> e.__k{j} <=> k), "
-            f"CAST(0.0 AS DOUBLE), (a, e) -> a + e.__x{i})))"
+            f"CAST(0.0 AS DOUBLE), (a, e) -> a + coalesce(e.__x{i}, 0.0d))))"
         )
 
     def _kkv_filter(a: int, b: int) -> str:
@@ -605,14 +627,16 @@ def _sum_to_triple_collect(
         same = (
             f"named_struct('out', acc.out, 'has', true, 'k', acc.k, "
             f"'cnt', acc.cnt + CAST(1.0 AS DOUBLE)"
-            + "".join(f", 's{i}', acc.s{i} + e.__x{i}" for i in range(_d_sums))
+            + "".join(
+                f", 's{i}', acc.s{i} + coalesce(e.__x{i}, 0.0d)" for i in range(_d_sums)
+            )
             + ")"
         )
         new = (
             f"named_struct('out', {flush}, 'has', true, 'k', e.k, "
             f"'cnt', CAST(0.0 AS DOUBLE) + CAST(1.0 AS DOUBLE)"
             + "".join(
-                f", 's{i}', CAST(0.0 AS DOUBLE) + e.__x{i}"
+                f", 's{i}', CAST(0.0 AS DOUBLE) + coalesce(e.__x{i}, 0.0d)"
                 for i in range(_d_sums)
             )
             + ")"

@@ -28,7 +28,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.triple import cat_pairs
-from .cofactor import _KKV_T, _KV_T, _cofactor_entries, _empty, _ent, _quad_pairs
+from .cofactor import (
+    _KKV_T,
+    _KV_T,
+    _check_entry_keys,
+    _cofactor_entries,
+    _empty,
+    _ent,
+    _quad_pairs,
+)
 
 __all__ = ["triple_entries", "triple_entries_sql", "flatten_triple", "unflatten_triple"]
 
@@ -74,6 +82,7 @@ def flatten_triple(
     (thousands for wide triples — it dominated wall clock at small SF).
     """
     group_by = list(group_by)
+    _check_entry_keys(group_by)
     tc = triple_col
 
     arrays = [f"array({_ent('N', -1, -1, '-1', '-1', f'{tc}.N')})"]

@@ -18,13 +18,17 @@ Catalyst does not rewrite agg-over-join into partial-agg ⊗ on its own
 * :func:`multiply_flatten_entries` — the same product as the flat entry
   rows :func:`~.flatten.flatten_triple` would emit from it, without ever
   building the nested struct.  This is the form a ⊕ consumes.
-* :func:`triple_over_join` — the end-to-end factorized pattern: group each
-  side by the join key, aggregate *locally* to one triple per key, join
-  the (tiny) grouped results, ⊗, then ⊕.  At 100 TB this is the whole
-  point: the join operates on |distinct keys| rows instead of the raw
-  fact tables, and each side's heavy aggregation shuffles only once on
-  its own key.  It has one physical path: the flat ⊗, one grouped sum,
-  and — for nested output — :func:`~.flatten.unflatten_triple`.
+* :func:`triple_over_join` — the cofactor over an equi-join.  When both
+  sides repeat join keys it is the factorized pattern: group each side
+  by the join key, aggregate *locally* to one triple per key, join the
+  (tiny) grouped results, ⊗ with the flat emitter, then one grouped ⊕.
+  At 100 TB this is the whole point: the join operates on |distinct
+  keys| rows instead of the raw fact tables, whose join would multiply
+  rows.  When the right key is unique (``unique_right=True``, a
+  key/foreign-key join) the join cannot multiply rows, so factorizing
+  saves nothing: it is one join plus one cofactor scan
+  (:func:`~.cofactor._cofactor_entries`).  Nested output is
+  :func:`~.flatten.unflatten_triple` over the entries on both paths.
 
 Both ⊗ emitters walk one slot table (:func:`_product_slots`), so the
 product's block layout and index arithmetic are written once.
@@ -42,10 +46,11 @@ from ..functions.triple import cat_pairs, pair_index
 from .cofactor import (
     _KKV_T,
     _KV_T,
+    _check_entry_keys,
+    _cofactor_entries,
     _empty,
     _quad_pairs,
     _sum_to_triple_collect,
-    lift_columns,
     sum_to_triple,
 )
 from .flatten import _entry, unflatten_triple
@@ -221,7 +226,7 @@ def multiply_flatten_entries(
     shape_right: tuple[int, int],
     nb: bool = False,
 ) -> Column:
-    """Flat entry rows of the ⊗ product (r14, guide §1.2): the array
+    """Flat entry rows of the ⊗ product: the array
     :func:`~.flatten.flatten_triple` would generate from
     ``multiply_triples(left, right)``, element for element and in the
     same emission order, with each slot's product expression inlined
@@ -260,7 +265,9 @@ def triple_over_join(
     unique_right: bool = False,
     flat_entries: bool = False,
 ) -> DataFrame:
-    """Factorized cofactor over an equi-join (README.md:166-174):
+    """Cofactor over an equi-join, equal to the cofactor of the
+    materialized ``df1 ⋈ df2`` (README.md:166-174).  By default it is the
+    factorized form:
 
         sum_triple( multiply_triple(g1.t, g2.t) )
         FROM (SELECT key, sum_to_triple(...) FROM df1 GROUP BY key) g1
@@ -268,13 +275,14 @@ def triple_over_join(
         USING key
 
     Each fact table is aggregated *before* the join, so the join touches
-    one row per key per side.  ``broadcast_right=True`` hints the grouped
-    right side to broadcast (correct when |distinct keys| is dim-sized).
-    ``group_by`` (columns of df1, e.g. a coarser key) yields one summed
-    triple per group — the reference's ``GROUP BY gb`` over the join
-    (README.md:166-172).  For one product triple per join key, aggregate
-    each side with :func:`~.cofactor.sum_to_triple`, join, and apply
-    :func:`multiply_triples`.
+    one row per key per side.  This pays when both sides repeat keys and
+    the materialized join would multiply rows.  ``broadcast_right=True``
+    hints the right side of the join to broadcast (correct when it is
+    dim-sized).  ``group_by`` (columns of df1, e.g. a coarser key) yields
+    one summed triple per group — the reference's ``GROUP BY gb`` over
+    the join (README.md:166-172).  For one product triple per join key,
+    aggregate each side with :func:`~.cofactor.sum_to_triple`, join, and
+    apply :func:`multiply_triples`.
 
     Join keys follow SQL inner-join semantics (NULL keys never match),
     matching the reference's ``JOIN ... ON a = b``.  Pass
@@ -283,49 +291,33 @@ def triple_over_join(
     blocks Catalyst's isnotnull inference and key-exchange reuse —
     ~1.7× on the sf0.1 factorized-join benchmark).
 
-    ``unique_right=True`` — callers MUST guarantee BOTH preconditions,
-    the operator cannot check them for free (ADVICE r13):
-
-    1. the right join key is UNIQUE in ``df2`` (a primary key): the
-       lift replaces a per-key aggregate, so a duplicated key would
-       silently multiply every statistic by extra join matches;
-    2. every ``num2``/``cat2`` feature is NON-NULL: the lift carries a
-       NULL through the product triple where the aggregate's sum
-       treated it as absent (0-contribution).
-
-    Vetted call sites (orders PK, non-null month/status features):
+    ``unique_right=True`` is the caller's promise that the right join
+    key is UNIQUE in ``df2`` (a primary key, as in a key/foreign-key
+    join).  The materialized join then has no more rows than ``df1``,
+    so factorizing saves nothing: ``df1`` is joined with ``df2``'s key
+    and feature columns and the join feeds one cofactor scan
+    (:func:`~.cofactor._cofactor_entries`) — no per-key triples, no ⊗.
+    The result is the same either way (NULL features are skipped as
+    the materialized cofactor skips them); a duplicated right key only
+    makes the join multiply rows, the cost this path exists to avoid.
+    Set the ``SPARK_GRAFT_DEBUG_UNIQUE`` env var to make a duplicated
+    key fail loudly: it runs one count-vs-distinct-count aggregate over
+    ``df2`` first.  Vetted call sites (orders PK):
     ``queries.triple_factorized_join`` and
-    ``queries.triple_factorized_join_grouped``.  Set the
-    ``SPARK_GRAFT_DEBUG_UNIQUE`` env var (or pass debug asserts via
-    tests) to make a violated key-uniqueness precondition fail loudly:
-    it runs one count-vs-distinct-count aggregate over ``df2`` before
-    planning the lift.
+    ``queries.triple_factorized_join_grouped``.
 
-    ``flat_entries=True`` returns the final ⊕ as FLAT entry rows
+    ``flat_entries=True`` returns the cofactor as FLAT entry rows
     (``group_by..., part, i, j, k1, k2, val`` — see
-    :func:`~.cofactor.sum_triples`) and skips the nested reassembly.
+    :func:`~.flatten.triple_entries`) and skips the nested assembly.
     """
     keys = [on] if isinstance(on, str) else list(on)
     group_by = list(group_by)
-    # join keys are (near-)unique → tiny groups → the collect builder
-    # (one shuffle per side instead of three); without categorical
-    # columns the dense-only aggregate is already a single shuffle
-    build1 = _sum_to_triple_collect if cat1 else sum_to_triple
-    g1 = build1(df1, num1, cat1, group_by=keys + group_by, nb=nb, result_col="__t1")
+    num1, cat1, num2, cat2 = list(num1), list(cat1), list(num2), list(cat2)
+    rhs_keys = [f"__rhs_{k}" for k in keys]
     if unique_right:
-        # r13: when the right side's join key is UNIQUE (a primary key —
-        # the caller's assertion), every group has exactly one row and
-        # its cofactor IS the per-row lift, so the grouped aggregate
-        # (one shuffle + per-group map assembly) is replaced by a pure
-        # projection (guide §2.4: remove the shuffle outright; measured
-        # 0.61 s → 0.12 s on the sf0.1 orders side).  Caveat: lift does
-        # not skip NULL feature values the way an aggregate's sum does —
-        # callers opt in only for non-null features on a key-unique side
-        # (preconditions + vetted call sites: see docstring).
         if os.environ.get("SPARK_GRAFT_DEBUG_UNIQUE"):
-            # debug-mode loud failure for a violated caller assertion
-            # (VERDICT r13 wrong #2) — one extra aggregate job, so it is
-            # opt-in, never part of the production plan
+            # opt-in: one extra aggregate job, never part of the
+            # production plan
             n_rows, n_keys = df2.select(
                 F.count(F.lit(1)),
                 F.count_distinct(*[F.col(k) for k in keys]),
@@ -336,39 +328,53 @@ def triple_over_join(
                     f"unique: {n_rows} rows vs {n_keys} distinct "
                     f"{keys} values"
                 )
-        g2 = df2.select(
-            *keys, lift_columns(num2, cat2, nb=nb).alias("__t2")
+        # the right features get positional names, so a df1 column of
+        # the same name cannot clash with them in the join
+        rnum = [f"__rhs_x{i}" for i in range(len(num2))]
+        rcat = [f"__rhs_k{j}" for j in range(len(cat2))]
+        left = df1
+        right = df2.select(
+            *[F.col(k).alias(r) for k, r in zip(keys, rhs_keys)],
+            *[F.col(x).alias(r) for x, r in zip(num2 + cat2, rnum + rcat)],
         )
     else:
+        _check_entry_keys(group_by)
+        # join keys are (near-)unique → tiny groups → the collect builder
+        # (one shuffle per side instead of three); without categorical
+        # columns the dense-only aggregate is already a single shuffle
+        build1 = _sum_to_triple_collect if cat1 else sum_to_triple
         build2 = _sum_to_triple_collect if cat2 else sum_to_triple
-        g2 = build2(df2, num2, cat2, group_by=keys, nb=nb, result_col="__t2")
-    g2 = g2.withColumnsRenamed({k: f"__rhs_{k}" for k in keys})
+        left = build1(df1, num1, cat1, group_by=keys + group_by, nb=nb, result_col="__t1")
+        right = build2(df2, num2, cat2, group_by=keys, nb=nb, result_col="__t2")
+        right = right.withColumnsRenamed(dict(zip(keys, rhs_keys)))
     if broadcast_right:
-        g2 = F.broadcast(g2)
+        right = F.broadcast(right)
     cond = None
-    for k in keys:
-        lhs, rhs = F.col(k), F.col(f"__rhs_{k}")
+    for k, r in zip(keys, rhs_keys):
+        lhs, rhs = F.col(k), F.col(r)
         c = lhs.eqNullSafe(rhs) if null_safe_keys else lhs == rhs
         cond = c if cond is None else cond & c
-    joined = g1.join(g2, cond, "inner").drop(*[f"__rhs_{k}" for k in keys])
-    # fused ⊗+flatten (r14, guide §1.2): generate the flat product
-    # entries straight off (__t1, __t2) — the nested product struct is
-    # never built — then ONE grouped sum
-    entries = joined.select(
-        *group_by,
-        F.inline(
-            multiply_flatten_entries(
-                F.col("__t1"),
-                F.col("__t2"),
-                (len(num1), len(cat1)),
-                (len(num2), len(cat2)),
-                nb=nb,
-            )
-        ),
-    )
-    summed = entries.groupBy(*group_by, "part", "i", "j", "k1", "k2").agg(
-        F.sum("val").alias("val")
-    )
+    joined = left.join(right, cond, "inner")
+    if unique_right:
+        summed = _cofactor_entries(joined, num1 + rnum, cat1 + rcat, group_by, nb, None)
+    else:
+        # the flat product entries straight off (__t1, __t2) — the nested
+        # product struct is never built — then ONE grouped sum
+        entries = joined.select(
+            *group_by,
+            F.inline(
+                multiply_flatten_entries(
+                    F.col("__t1"),
+                    F.col("__t2"),
+                    (len(num1), len(cat1)),
+                    (len(num2), len(cat2)),
+                    nb=nb,
+                )
+            ),
+        )
+        summed = entries.groupBy(*group_by, "part", "i", "j", "k1", "k2").agg(
+            F.sum("val").alias("val")
+        )
     if flat_entries:
         return summed
     return unflatten_triple(

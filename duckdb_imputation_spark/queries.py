@@ -190,16 +190,12 @@ def triple_factorized_join(spark, sf):
         cat1=["l_linenumber"],
         num2=["o_month"],
         cat2=["o_status"],
-        # o_orderkey is the orders PK and both right-side features are
-        # non-null, so the right cofactor is a pure per-row lift — no
-        # grouped aggregate, no extra shuffle (r13; measured 0.61 s ->
-        # 0.12 s for that side at sf0.1)
+        # o_orderkey is the orders PK: the join has exactly |lineitem|
+        # rows, so factorizing saves nothing — one join plus one cofactor
+        # scan, no per-key triples and no ⊗ (4.98 s -> 1.50 s noop at
+        # sf0.1, median of 7 runs on a 4-core box)
         unique_right=True,
-        # r14: this row outputs FLAT entries anyway, so skip the nested
-        # reassembly + re-flatten round trip (value-identical row for
-        # row, see sum_triples) — drops a single-row exchange, two
-        # collect_list ObjectHashAggregates and the two widest
-        # projections from the plan
+        # this row outputs FLAT entries, so the nested assembly is skipped
         flat_entries=True,
     )
 
@@ -3648,8 +3644,8 @@ def triple_factorized_join_grouped(spark, sf):
         num1=["l_quantity"], cat1=["l_linenumber"],
         num2=["o_month"], cat2=[],
         group_by=["l_returnflag"],
-        unique_right=True,  # orders PK side — lift, not aggregate (r13)
-        flat_entries=True,  # flat output row — skip reassemble+re-flatten (r14)
+        unique_right=True,  # orders PK: one join plus one cofactor scan
+        flat_entries=True,  # flat output row — no nested assembly
     )
 
 

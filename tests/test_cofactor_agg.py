@@ -126,6 +126,29 @@ def test_group_key_named_like_an_entry_column(ring_fixture, key):
     assert got == exp
 
 
+@pytest.mark.parametrize("key", ["i", "val"])
+def test_entry_rows_reject_a_group_key_named_like_an_entry_column(ring_fixture, key):
+    """Flat entry rows carry the group keys beside (part, i, j, k1, k2,
+    val): a key of one of those names raises instead of returning two
+    columns of one name."""
+    from duckdb_imputation_spark.operators.flatten import flatten_triple, triple_entries
+    from duckdb_imputation_spark.operators.multiply import triple_over_join
+
+    df = ring_fixture.withColumnRenamed("gb", key)
+    with pytest.raises(ValueError, match=f"'{key}'"):
+        triple_entries(df, NUM, CAT, group_by=[key])
+    nested = sum_to_triple(df, NUM, CAT, group_by=[key])
+    with pytest.raises(ValueError, match=f"'{key}'"):
+        flatten_triple(nested, len(NUM), len(CAT), group_by=[key])
+    for unique_right in (True, False):
+        with pytest.raises(ValueError, match=f"'{key}'"):
+            triple_over_join(
+                df, ring_fixture, on="a", num1=["b"], cat1=["d"], num2=["c"],
+                cat2=["f"], group_by=[key], unique_right=unique_right,
+                flat_entries=True,
+            )
+
+
 def test_collect_strategy_matches_twolevel(spark, ring_fixture):
     """The collect builder (small-groups path) must agree with the
     two-level path, nested triples and map order included."""

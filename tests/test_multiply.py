@@ -1,6 +1,9 @@
 """Factorized ⊗ over joins vs reference golden literals (test_mul.py) and
 vs the driver-side algebra."""
 
+from collections import Counter
+
+import pytest
 from pyspark.sql import functions as F
 
 from duckdb_imputation_spark.functions.triple import Triple
@@ -183,10 +186,8 @@ def test_triple_over_join_flat_entries_equals_flattened(ring_fixture):
 
 def test_unique_right_debug_guard_trips_on_duplicate_keys(spark, monkeypatch):
     """SPARK_GRAFT_DEBUG_UNIQUE makes a violated unique_right caller
-    assertion fail loudly instead of silently inflating statistics
-    (VERDICT r13 wrong #2)."""
-    import pytest
-
+    assertion fail loudly: a duplicated right key makes the join
+    multiply rows, the cost unique_right promises to avoid."""
     left = spark.createDataFrame([(1, 2.0), (2, 3.0)], "k int, x double")
     dup_right = spark.createDataFrame(
         [(1, 10.0), (1, 11.0), (2, 20.0)], "k int, y double"
@@ -248,3 +249,60 @@ def test_triple_over_join_flat_entries_nb_and_grouped(ring_fixture):
         ).collect()
     )
     assert got_g == exp_g
+
+
+def _null_edge_frames(spark):
+    """Left ``(k, x, a, g)`` and right ``(k, y, b)`` frames with NULL
+    features and keys.  Right key 1 has a NULL and a non-NULL ``y``
+    (a group of 2), key 2 a NULL ``b``, key 5 a group of 65 rows (the
+    collect builder's fold form), and both sides carry NULL join keys;
+    left keys 8 and 9 match nothing.  Values are integers, so every
+    float sum is exact in any order."""
+    left = spark.createDataFrame(
+        [
+            (1, 2.0, 1, 0), (2, 5.0, 1, 0), (3, None, 2, 1), (5, 1.0, None, 1),
+            (5, 3.0, 2, 0), (None, 4.0, 1, 0), (None, 6.0, 2, 1), (8, 7.0, 1, 1),
+            (9, 1.0, 3, 0),
+        ],
+        "k int, x double, a int, g int",
+    )
+    right = spark.createDataFrame(
+        [(1, None, 7), (1, 3.0, 7), (2, 4.0, None), (3, 2.0, 8), (None, 4.0, 8)]
+        + [
+            (5, None if r % 7 == 0 else float(r % 5), None if r % 11 == 3 else r % 3)
+            for r in range(65)
+        ],
+        "k int, y double, b int",
+    )
+    return left, right
+
+
+@pytest.mark.parametrize("null_safe_keys", [False, True])
+@pytest.mark.parametrize("nb", [False, True])
+def test_triple_over_join_both_paths_equal_materialized(spark, null_safe_keys, nb):
+    """Both triple_over_join paths equal the cofactor of the materialized
+    join, NULL features, NULL categories, NULL join keys and unmatched
+    keys included: a NULL feature is skipped, as SQL SUM skips it."""
+    from duckdb_imputation_spark.operators.flatten import triple_entries
+
+    left, right = _null_edge_frames(spark)
+    rk = right.withColumnRenamed("k", "rk")
+    on = left["k"].eqNullSafe(rk["rk"]) if null_safe_keys else left["k"] == rk["rk"]
+    joined = left.join(rk, on)
+    kwargs = dict(
+        on="k", num1=["x"], cat1=["a"], num2=["y"], cat2=["b"], nb=nb,
+        group_by=["g"], null_safe_keys=null_safe_keys,
+    )
+    feats = (["x", "y"], ["a", "b"])
+
+    exp_flat = Counter(tuple(r) for r in triple_entries(joined, *feats, ["g"], nb).collect())
+    exp_nested = {
+        r["g"]: r["triple"]
+        for r in sum_to_triple(joined, *feats, group_by=["g"], nb=nb).collect()
+    }
+    assert exp_flat and exp_nested
+    for unique_right in (True, False):
+        flat = triple_over_join(left, right, unique_right=unique_right, flat_entries=True, **kwargs)
+        assert Counter(tuple(r) for r in flat.collect()) == exp_flat, unique_right
+        nested = triple_over_join(left, right, unique_right=unique_right, **kwargs)
+        assert {r["g"]: r["triple"] for r in nested.collect()} == exp_nested, unique_right
