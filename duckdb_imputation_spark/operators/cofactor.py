@@ -40,12 +40,6 @@ same values):
 * wide shape — a dedicated dense aggregate's entries are unioned with
   the sparse entries: two scans, but the quad products run once per row
   instead of once per exploded entry.
-* :func:`_sum_to_triple_collect` — one ``groupBy`` that collects each
-  group's rows and assembles the maps with higher-order functions.  Only
-  the factorized (many-to-many) path of
-  :func:`~.multiply.triple_over_join` uses it, for its per-join-key sides,
-  where ⊗ needs nested per-key operands; a key-unique right side is
-  joined first and goes through :func:`_cofactor_entries` instead.
 * :func:`sum_triples` — ⊕ over a column of triples: lower to flat entries,
   one grouped sum, optional nested reassembly
   (:func:`~.flatten.unflatten_triple`).
@@ -67,17 +61,6 @@ __all__ = ["sum_to_triple", "sum_to_triples_conditional", "sum_triples", "lift_c
 _KV_T = "array<struct<key:int,value:double>>"
 _KKV_T = "array<struct<key1:int,key2:int,value:double>>"
 _ENTRY_COLS = ("part", "i", "j", "k1", "k2", "val")
-
-# Collect-path assembly gate (r14): groups with at most this many
-# collected rows build their categorical maps with the filter-per-key
-# form (cheap int compares, bounded <= rows² ops); larger groups take
-# the sort+fold form (O(rows log rows + keys)).  Both forms are
-# value-identical; the If is evaluated per group at runtime, so one
-# frame can mix shapes.  Same-session A/B on the factorized-join shape
-# (1-7 rows/group): filter 1.42 s vs fold-always 1.92 s noop — and the
-# fold's struct-allocation constant only pays for itself once a group's
-# rows × keys product is well past rows·log(rows).
-_COLLECT_FOLD_MIN_ROWS = 64
 
 # Fused-dense cutover (r13, re-validated r14): the single-scan fused
 # cofactor gates d(d+1)/2 quad products on each of the (fan + 1)
@@ -164,13 +147,6 @@ def _dense_fields(d: int, n_quads: int) -> list[Column]:
         arr([f"__lin_{i}" for i in range(d)]).alias("lin_agg"),
         arr([f"__quad_{p}" for p in range(n_quads)]).alias("quad_agg"),
     ]
-
-
-def _finish(
-    src: DataFrame, group_by: list[str], keyless: bool, fields: list[Column], result_col: str
-) -> DataFrame:
-    out = src.select(*group_by, F.struct(*fields).alias(result_col))
-    return out.drop("__g") if keyless else out
 
 
 def _ent(part: str, i, j, k1, k2, val) -> str:
@@ -379,7 +355,8 @@ def sum_to_triple(
             _empty(f"array<{_KKV_T}>").alias("quad_cat"),
         ]
     dense = base.groupBy(*group_by).agg(*_dense_aggs(d, quad_idx))
-    return _finish(dense, group_by, keyless, fields, result_col)
+    out = dense.select(*group_by, F.struct(*fields).alias(result_col))
+    return out.drop("__g") if keyless else out
 
 
 def lift_columns(
@@ -491,228 +468,6 @@ def sum_triples(
             summed, d_num, d_cat, group_by, nb=nb, result_col=result_col
         )
     return summed.drop("__g") if internal_key else summed
-
-
-def _sum_to_triple_collect(
-    df: DataFrame,
-    num_cols: Sequence[str],
-    cat_cols: Sequence[str],
-    group_by: Sequence[str] = (),
-    nb: bool = False,
-    result_col: str = "triple",
-) -> DataFrame:
-    """Small-groups cofactor: ONE groupBy; categorical maps are assembled
-    from the group's collected rows with higher-order functions.
-
-    4x faster than the two-level path when groups are tiny (e.g. grouping
-    by a join key before ⊗ — the factorized-join sides), because it
-    avoids two extra shuffles and a join.  Per-group assembly cost since
-    r14 is min(rows × keys with rows ≤ 64, rows log rows + keys): small
-    groups keep the filter-per-key form, large groups switch to a
-    sort+fold at runtime (a lazy size gate — see the inline note), so a
-    group with many rows AND many distinct keys can no longer go
-    quadratic.  The whole group's rows must still fit one aggregation
-    buffer, so :func:`sum_to_triple`'s two-level path remains the choice
-    for large groups — it stays map-side-combine-bounded.
-
-    Agrees with :func:`sum_to_triple` entry for entry, map order
-    included (a NULL categorical key sorts first in both); float sums
-    over non-integer values may differ in the last bits (a different
-    accumulation order).
-    """
-    num_cols, cat_cols = list(num_cols), list(cat_cols)
-    d, c = len(num_cols), len(cat_cols)
-    base, group_by, keyless = _project(df, num_cols, cat_cols, list(group_by))
-
-    quad_idx = _quad_pairs(d, nb)
-    aggs = _dense_aggs(d, quad_idx)
-    aggs.append(
-        F.collect_list(
-            F.struct(
-                *[F.col(f"__k{j}") for j in range(c)],
-                *[F.col(f"__x{i}") for i in range(d)],
-            )
-        ).alias("__rows")
-    )
-    g = base.groupBy(*group_by).agg(*aggs)
-    # builders generated as SQL text — see flatten_triple for why.
-    #
-    # r14 (VERDICT r13 #3, guide §1.2): the per-key map assembly used to
-    # run one filter() scan of __rows PER DISTINCT KEY — O(rows × keys)
-    # per group unconditionally, the engine's worst asymptotic path for
-    # high-cardinality categoricals at 100 TB.  Each map now has TWO
-    # value-identical forms chosen PER GROUP at runtime by a lazy
-    # size(__rows) gate (Catalyst's If evaluates only the taken branch):
-    #   * small groups (<= _COLLECT_FOLD_MIN_ROWS rows) keep the
-    #     filter-per-key form — its per-element work is a bare int
-    #     compare, which beats the fold's struct allocations up to
-    #     ~rows² bounded cheap ops (same-session A/B at the
-    #     factorized-join shape, 1-7 rows/group: filter 1.42 s vs
-    #     fold-always 1.92 s noop);
-    #   * large groups take ONE array_sort + ONE segmented aggregate()
-    #     fold — O(rows log rows + keys), so a group with many rows and
-    #     many keys can no longer go quadratic.
-    # Value identity of the fold form, bit for bit:
-    #   * key SET and ORDER: distinct keys come out ascending with NULL
-    #     first, as sort_array(array_distinct(<int array>)) places them;
-    #   * per-key float sums: the 'pos' field (the element's __rows
-    #     index) breaks ties inside a key, so each key's x values fold
-    #     in __rows order — the same order filter() preserved — and the
-    #     fold starts from the same CAST(0.0 AS DOUBLE) seed;
-    #   * counts stay exact (small-integer double increments);
-    #   * a NULL x adds 0.0 in both forms, so a per-key sum skips it as
-    #     SQL SUM (and the materialized cofactor) does.
-    # The per-key sums/counts themselves are what they always were; only
-    # the assembly loop changed shape.
-    _d_sums = 0 if nb else d
-
-    def _hybrid(filter_form: str, fold_form: str) -> str:
-        return (
-            f"IF(size(__rows) <= {_COLLECT_FOLD_MIN_ROWS}, "
-            f"{filter_form}, {fold_form})"
-        )
-
-    def _col_keys(j: int) -> str:
-        return f"sort_array(array_distinct(transform(__rows, e -> e.__k{j})))"
-
-    def _kv_count_filter(j: int) -> str:
-        return (
-            f"transform({_col_keys(j)}, k -> named_struct('key', k, 'value', "
-            f"CAST(size(filter(__rows, e -> e.__k{j} <=> k)) AS DOUBLE)))"
-        )
-
-    def _kv_sum_filter(i: int, j: int) -> str:
-        return (
-            f"transform({_col_keys(j)}, k -> named_struct('key', k, 'value', "
-            f"aggregate(filter(__rows, e -> e.__k{j} <=> k), "
-            f"CAST(0.0 AS DOUBLE), (a, e) -> a + coalesce(e.__x{i}, 0.0d))))"
-        )
-
-    def _kkv_filter(a: int, b: int) -> str:
-        pair_keys = (
-            f"array_sort(array_distinct(transform(__rows, "
-            f"e -> named_struct('key1', e.__k{a}, 'key2', e.__k{b}))))"
-        )
-        return (
-            f"transform({pair_keys}, kk -> named_struct("
-            f"'key1', kk.key1, 'key2', kk.key2, 'value', "
-            f"CAST(size(filter(__rows, e -> e.__k{a} <=> kk.key1 AND "
-            f"e.__k{b} <=> kk.key2)) AS DOUBLE)))"
-        )
-
-    def _fold_single(j: int) -> str:
-        elem = (
-            f"named_struct('k', e.__k{j}, 'pos', i"
-            + "".join(f", '__x{i}', e.__x{i}" for i in range(_d_sums))
-            + ")"
-        )
-        sorted_arr = f"array_sort(transform(__rows, (e, i) -> {elem}))"
-        out_t = (
-            "array<struct<key:int,cnt:double"
-            + "".join(f",s{i}:double" for i in range(_d_sums))
-            + ">>"
-        )
-        acc0 = (
-            f"named_struct('out', CAST(array() AS {out_t}), 'has', false, "
-            f"'k', CAST(NULL AS INT), 'cnt', CAST(0.0 AS DOUBLE)"
-            + "".join(f", 's{i}', CAST(0.0 AS DOUBLE)" for i in range(_d_sums))
-            + ")"
-        )
-        entry = (
-            "named_struct('key', acc.k, 'cnt', acc.cnt"
-            + "".join(f", 's{i}', acc.s{i}" for i in range(_d_sums))
-            + ")"
-        )
-        flush = f"IF(acc.has, concat(acc.out, array({entry})), acc.out)"
-        same = (
-            f"named_struct('out', acc.out, 'has', true, 'k', acc.k, "
-            f"'cnt', acc.cnt + CAST(1.0 AS DOUBLE)"
-            + "".join(
-                f", 's{i}', acc.s{i} + coalesce(e.__x{i}, 0.0d)" for i in range(_d_sums)
-            )
-            + ")"
-        )
-        new = (
-            f"named_struct('out', {flush}, 'has', true, 'k', e.k, "
-            f"'cnt', CAST(0.0 AS DOUBLE) + CAST(1.0 AS DOUBLE)"
-            + "".join(
-                f", 's{i}', CAST(0.0 AS DOUBLE) + coalesce(e.__x{i}, 0.0d)"
-                for i in range(_d_sums)
-            )
-            + ")"
-        )
-        return (
-            f"aggregate({sorted_arr}, {acc0}, "
-            f"(acc, e) -> IF(acc.has AND (acc.k <=> e.k), {same}, {new}), "
-            f"acc -> {flush})"
-        )
-
-    def kv_count(j: int) -> str:
-        return _hybrid(
-            _kv_count_filter(j),
-            f"transform({_fold_single(j)}, "
-            f"t -> named_struct('key', t.key, 'value', t.cnt))",
-        )
-
-    def kv_sum(i: int, j: int) -> str:
-        return _hybrid(
-            _kv_sum_filter(i, j),
-            f"transform({_fold_single(j)}, "
-            f"t -> named_struct('key', t.key, 'value', t.s{i}))",
-        )
-
-    def kkv(a: int, b: int) -> str:
-        # pair keys: the OLD order was array_sort over (key1, key2)
-        # structs — struct field comparison, which this sort reproduces
-        # with the same struct comparator (pos appended only as the
-        # uniqueness tiebreak; counts need no within-key order)
-        elem = f"named_struct('k1', e.__k{a}, 'k2', e.__k{b}, 'pos', i)"
-        sorted_arr = f"array_sort(transform(__rows, (e, i) -> {elem}))"
-        out_t = "array<struct<key1:int,key2:int,value:double>>"
-        acc0 = (
-            f"named_struct('out', CAST(array() AS {out_t}), 'has', false, "
-            f"'k1', CAST(NULL AS INT), 'k2', CAST(NULL AS INT), "
-            f"'cnt', CAST(0.0 AS DOUBLE))"
-        )
-        entry = "named_struct('key1', acc.k1, 'key2', acc.k2, 'value', acc.cnt)"
-        flush = f"IF(acc.has, concat(acc.out, array({entry})), acc.out)"
-        same = (
-            "named_struct('out', acc.out, 'has', true, 'k1', acc.k1, "
-            "'k2', acc.k2, 'cnt', acc.cnt + CAST(1.0 AS DOUBLE))"
-        )
-        new = (
-            f"named_struct('out', {flush}, 'has', true, 'k1', e.k1, "
-            f"'k2', e.k2, 'cnt', CAST(0.0 AS DOUBLE) + CAST(1.0 AS DOUBLE))"
-        )
-        fold = (
-            f"aggregate({sorted_arr}, {acc0}, "
-            f"(acc, e) -> IF(acc.has AND (acc.k1 <=> e.k1) AND "
-            f"(acc.k2 <=> e.k2), {same}, {new}), acc -> {flush})"
-        )
-        return _hybrid(_kkv_filter(a, b), fold)
-
-    fields = _dense_fields(d, len(quad_idx))
-    fields.append(
-        F.expr("array(" + ", ".join(kv_count(j) for j in range(c)) + ")").alias(
-            "lin_cat"
-        )
-    )
-    if not nb:
-        fields += [
-            (
-                F.expr(
-                    "array("
-                    + ", ".join(kv_sum(i, j) for i in range(d) for j in range(c))
-                    + ")"
-                )
-                if d
-                else _empty(f"array<{_KV_T}>")
-            ).alias("quad_num_cat"),
-            F.expr(
-                "array(" + ", ".join(kkv(a, b) for (a, b) in cat_pairs(c)) + ")"
-            ).alias("quad_cat"),
-        ]
-    return _finish(g, group_by, keyless, fields, result_col)
 
 
 def sum_to_triples_conditional(

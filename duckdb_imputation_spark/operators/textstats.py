@@ -289,7 +289,10 @@ def repetition_metrics(col: Column, n: int = 2) -> Column:
         ).otherwise(F.array().cast("array<string>"))
         return F.element_at(F.transform(F.array(grams), gram_fracs), 1)
 
-    gf = F.element_at(F.transform(F.array(ws_tokens(c)), build), 1)
+    # trim strips spaces only, so a text that starts or ends with another
+    # whitespace ("\n") splits into an empty token; words are non-empty
+    words = F.filter(ws_tokens(c), lambda t: F.length(t) > 0)
+    gf = F.element_at(F.transform(F.array(words), build), 1)
     lf = F.element_at(F.transform(F.array(lines), line_frac), 1)
     # bind gf once — two direct field references would re-run the whole
     # gram pipeline (the exact no-CSE trap this module documents)

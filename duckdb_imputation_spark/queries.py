@@ -2739,7 +2739,7 @@ def token_entropy_documents(spark, sf):
 
 
 def _repetition_oracle() -> str:
-    tk = _ws_sql("text")
+    tk = f"list_filter({_ws_sql('text')}, t -> length(t) > 0)"
     lines = (
         "list_filter(list_transform(CASE WHEN length(trim(COALESCE(text, ''))) = 0 "
         "THEN [] ELSE regexp_split_to_array(trim(COALESCE(text, '')), '\\n') END, "
@@ -4021,6 +4021,19 @@ def _hist_sql(pred_sql: str, rel_view: str) -> str:
     )
 
 
+def _class_triples(df, num_cols, cat_cols, label, nb=False):
+    """One triple per class of ``label``: one ``triple_entries`` scan
+    grouped by the label, each class's entries folded on the driver.
+    Classes ascend, as in ``sql_twin.class_triples_duckdb``, so train
+    order (and argmax tie-breaking) matches the oracle's."""
+    by_class = {}
+    for r in triple_entries(df, num_cols, cat_cols, group_by=[label], nb=nb).collect():
+        by_class.setdefault(r[label], []).append(r)
+    labels = sorted(by_class)
+    d, c = len(num_cols), len(cat_cols)
+    return labels, [Triple.from_entries(by_class[lv], d, c, nb=nb) for lv in labels]
+
+
 @register("lda_train_predict_histogram")
 def lda_train_predict_histogram(spark, sf):
     """Full LDA train+predict loop in-catalog: cofactor → driver train →
@@ -4078,10 +4091,7 @@ def nb_train_predict_histogram(spark, sf):
         F.ascii("o_orderpriority").alias("prio"),
         F.ascii("o_orderstatus").alias("status"),
     )
-    per_class = sum_to_triple(o, ["m", "d"], ["prio"], group_by=["status"], nb=True)
-    rows = sorted(per_class.collect(), key=lambda r: r["status"])
-    labels = [r["status"] for r in rows]
-    triples = [Triple.from_row(r["triple"], d_num=2, d_cat=1) for r in rows]
+    labels, triples = _class_triples(o, ["m", "d"], ["prio"], "status", nb=True)
     model = nb_train(triples, labels=labels)
     return (
         o.withColumn("pred", model.predict_expr(["m", "d"], ["prio"]))
@@ -4130,10 +4140,7 @@ def qda_train_predict_histogram(spark, sf):
         F.round(F.col("l_tax") * 100).cast("double").alias("tax"),
         F.col("l_linenumber").alias("ln"),
     )
-    per_class = sum_to_triple(li, ["q", "disc", "tax"], [], group_by=["ln"])
-    rows = sorted(per_class.collect(), key=lambda r: r["ln"])
-    labels = [int(r["ln"]) for r in rows]
-    triples = [Triple.from_row(r["triple"], d_num=3, d_cat=0) for r in rows]
+    labels, triples = _class_triples(li, ["q", "disc", "tax"], [], "ln")
     model = qda_train(triples, labels=labels)
     pred = qda_predict_sql(model, ["q", "disc", "tax"])
     return (
@@ -4181,7 +4188,7 @@ def doc_quality_nb_histogram(spark, sf):
     (GROUP BY language) over document features — char count, token
     count, source id — then per-document language prediction, output as
     a histogram.  Same train/predict machinery as
-    nb_train_predict_histogram (sum_to_triple nb=True → nb_train →
+    nb_train_predict_histogram (nb entries per class → nb_train →
     log-space Column scoring); the oracle factory retrains from
     DuckDB-computed class triples and bakes the coefficients."""
     from .ml.nb import nb_train
@@ -4192,10 +4199,7 @@ def doc_quality_nb_histogram(spark, sf):
         F.substring("source", 4, 10).cast("int").alias("src"),
         F.ascii(F.substring("lang", 2, 1)).alias("lg"),
     )
-    per_class = sum_to_triple(d, ["nc", "tc"], ["src"], group_by=["lg"], nb=True)
-    rows = sorted(per_class.collect(), key=lambda r: r["lg"])
-    labels = [r["lg"] for r in rows]
-    triples = [Triple.from_row(r["triple"], d_num=2, d_cat=1) for r in rows]
+    labels, triples = _class_triples(d, ["nc", "tc"], ["src"], "lg", nb=True)
     model = nb_train(triples, labels=labels)
     return (
         d.withColumn("pred", model.predict_expr(["nc", "tc"], ["src"]))

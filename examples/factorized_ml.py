@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """The reference README's flagship flow (README.md:163-186), Spark-first:
 
-1. aggregate each table to per-join-key triples,
-2. ⊗ across the join, ⊕ to one training triple — the join's cofactor
-   WITHOUT materializing the join,
+1. the cofactor of ``lineitem ⋈ orders`` as flat entry rows — orders
+   joins on its primary key, so the join cannot multiply rows and one
+   join plus one cofactor scan is the plan (``unique_right=True``),
+2. ⊕-fold the entries to one training triple on the driver,
 3. train ridge regression from the triple on the driver,
 4. predict back on the cluster as a generated Column expression.
 
@@ -37,8 +38,10 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     )
 
     # cofactor of (l_quantity, l_extendedprice, o_price100 | l_linenumber)
-    # over lineitem ⋈ orders — factorized: the fact tables never join raw
-    t_row = triple_over_join(
+    # over lineitem ⋈ orders.  o_orderkey is the orders primary key, so
+    # the join cannot multiply rows: unique_right joins first and runs one
+    # cofactor scan, and the driver folds the flat entry rows
+    entries = triple_over_join(
         li,
         orders,
         on="l_orderkey",
@@ -46,8 +49,10 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
         cat1=["l_linenumber"],
         num2=["o_price100"],
         cat2=[],
-    ).collect()[0]["triple"]
-    triple = Triple.from_row(t_row)
+        unique_right=True,
+        flat_entries=True,
+    ).collect()
+    triple = Triple.from_entries(entries, 3, 1)
     print(f"training triple: N={triple.n}, d_num={triple.d_num}, d_cat={triple.d_cat}")
 
     # ridge regression: predict l_extendedprice (label idx 1) from the rest

@@ -6,7 +6,6 @@ import pytest
 
 from duckdb_imputation_spark.functions.triple import Triple
 from duckdb_imputation_spark.operators.cofactor import (
-    _sum_to_triple_collect,
     lift_columns,
     sum_to_triple,
     sum_triples,
@@ -147,55 +146,6 @@ def test_entry_rows_reject_a_group_key_named_like_an_entry_column(ring_fixture, 
                 cat2=["f"], group_by=[key], unique_right=unique_right,
                 flat_entries=True,
             )
-
-
-def test_collect_strategy_matches_twolevel(spark, ring_fixture):
-    """The collect builder (small-groups path) must agree with the
-    two-level path, nested triples and map order included."""
-    a = _sum_to_triple_collect(ring_fixture, NUM, CAT, group_by=["gb"])
-    b = sum_to_triple(ring_fixture, NUM, CAT, group_by=["gb"])
-    ga = {r["gb"]: triple_dict(r["triple"]) for r in a.collect()}
-    gb_ = {r["gb"]: triple_dict(r["triple"]) for r in b.collect()}
-    assert ga == gb_
-
-
-@pytest.mark.parametrize("nb", [False, True])
-def test_collect_matches_twolevel_with_null_keys(spark, nb):
-    """Groups of 10, 64, 65 and 300 rows — which also run the sort+fold
-    form above ``_COLLECT_FOLD_MIN_ROWS`` — with NULL category keys and
-    integer-valued numerics (so float sums are exact in any order): the
-    two builders' nested triples are equal, a NULL key sorting first in
-    each map on both."""
-    rows = [
-        (
-            g,
-            float((r * 7 + g) % 11),
-            float(r % 5 - 2),
-            None if r % 9 == 0 else r % 6,
-            None if r % 13 == 4 else (r * 5 + g) % 4,
-        )
-        for g, size in enumerate((10, 64, 65, 300))
-        for r in range(size)
-    ]
-    df = spark.createDataFrame(rows, "g int, x0 double, x1 double, k0 int, k1 int")
-    got = [
-        {
-            r["g"]: r["triple"]
-            for r in build(
-                df, ["x0", "x1"], ["k0", "k1"], group_by=["g"], nb=nb
-            ).collect()
-        }
-        for build in (_sum_to_triple_collect, sum_to_triple)
-    ]
-    assert got[0] == got[1]
-    # NULL keys reached the maps
-    assert got[0][3]["lin_cat"][0][0]["key"] is None
-
-
-def test_collect_strategy_nb_and_global(ring_fixture):
-    a = _sum_to_triple_collect(ring_fixture, NUM, CAT, nb=True).collect()
-    b = sum_to_triple(ring_fixture, NUM, CAT, nb=True).collect()
-    assert triple_dict(a[0]["triple"]) == triple_dict(b[0]["triple"])
 
 
 def test_input_validation(ring_fixture):

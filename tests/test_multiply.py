@@ -210,6 +210,52 @@ def test_unique_right_debug_guard_trips_on_duplicate_keys(spark, monkeypatch):
     assert triple_dict(ok) == triple_dict(agg_t)
 
 
+def test_unique_right_debug_guard_follows_the_join_matching_rule(spark, monkeypatch):
+    """The debug guard counts key uniqueness as the join matches keys:
+    under <=> a NULL key is one value, so one NULL beside a non-NULL key
+    is unique and two NULLs are not; under = NULL-keyed rows match
+    nothing, so two of them cannot repeat a key."""
+    left = spark.createDataFrame([(1, 2.0), (None, 3.0)], "k int, x double")
+    one_null = spark.createDataFrame([(1, 10.0), (None, 20.0)], "k int, y double")
+    two_nulls = spark.createDataFrame(
+        [(1, 10.0), (None, 20.0), (None, 30.0)], "k int, y double"
+    )
+    kwargs = dict(on="k", num1=["x"], num2=["y"], unique_right=True)
+    monkeypatch.setenv("SPARK_GRAFT_DEBUG_UNIQUE", "1")
+    triple_over_join(left, one_null, null_safe_keys=True, **kwargs)
+    with pytest.raises(ValueError, match="not unique"):
+        triple_over_join(left, two_nulls, null_safe_keys=True, **kwargs)
+    triple_over_join(left, two_nulls, **kwargs)
+
+
+def test_triple_over_join_skewed_key(spark):
+    """One join key carrying 10⁵ rows on each side of the factorized
+    path: the per-key aggregation is bounded by map-side combining, so
+    it fits a small heap, and the result is the driver-side ⊗ of the two
+    sides' triples (the 10¹⁰-row join is never built).  Integer values
+    keep every sum exact."""
+    n = 100_000
+    left = spark.range(n).select(
+        F.lit(7).alias("k"),
+        (F.col("id") % 7).cast("double").alias("x"),
+        (F.col("id") % 5).cast("int").alias("a"),
+    )
+    right = spark.range(n).select(
+        F.lit(7).alias("k"),
+        (F.col("id") % 3).cast("double").alias("y"),
+        (F.col("id") % 4).cast("int").alias("b"),
+    )
+    got = triple_over_join(
+        left, right, on="k", num1=["x"], cat1=["a"], num2=["y"], cat2=["b"]
+    ).collect()
+    exp = Triple.from_row(
+        sum_to_triple(left, ["x"], ["a"]).collect()[0]["triple"]
+    ) * Triple.from_row(sum_to_triple(right, ["y"], ["b"]).collect()[0]["triple"])
+    assert len(got) == 1
+    assert triple_dict(got[0]["triple"]) == exp.to_dict()
+    assert exp.n == n * n
+
+
 def test_triple_over_join_flat_entries_nb_and_grouped(ring_fixture):
     """The fused flat-entry generator (multiply_flatten_entries) equals
     flatten(assembled ⊕) on the nb diagonal shape and under group_by."""
@@ -254,15 +300,21 @@ def test_triple_over_join_flat_entries_nb_and_grouped(ring_fixture):
 def _null_edge_frames(spark):
     """Left ``(k, x, a, g)`` and right ``(k, y, b)`` frames with NULL
     features and keys.  Right key 1 has a NULL and a non-NULL ``y``
-    (a group of 2), key 2 a NULL ``b``, key 5 a group of 65 rows (the
-    collect builder's fold form), and both sides carry NULL join keys;
-    left keys 8 and 9 match nothing.  Values are integers, so every
-    float sum is exact in any order."""
+    (a group of 2), key 2 a NULL ``b``, key 5 a group of 65 rows, and
+    both sides carry NULL join keys; left keys 8 and 9 match nothing.
+    Left keys 1, 3 and 5 also carry groups of 10, 64 and 300 rows, so
+    per-key groups of many sizes meet on both sides.  Values are
+    integers, so every float sum is exact in any order."""
     left = spark.createDataFrame(
         [
             (1, 2.0, 1, 0), (2, 5.0, 1, 0), (3, None, 2, 1), (5, 1.0, None, 1),
             (5, 3.0, 2, 0), (None, 4.0, 1, 0), (None, 6.0, 2, 1), (8, 7.0, 1, 1),
             (9, 1.0, 3, 0),
+        ]
+        + [
+            (k, None if r % 8 == 5 else float(r % 6), None if r % 9 == 2 else r % 4, r % 2)
+            for k, size in ((1, 10), (3, 64), (5, 300))
+            for r in range(size)
         ],
         "k int, x double, a int, g int",
     )
@@ -301,6 +353,16 @@ def test_triple_over_join_both_paths_equal_materialized(spark, null_safe_keys, n
         for r in sum_to_triple(joined, *feats, group_by=["g"], nb=nb).collect()
     }
     assert exp_flat and exp_nested
+    # a NULL category key sorts first in each nested map
+    keyed = [
+        [e["key"] for e in m]
+        for t in exp_nested.values()
+        for part in ("lin_cat", "quad_num_cat")
+        if part in t.asDict()
+        for m in t[part]
+    ]
+    assert any(ks and ks[0] is None for ks in keyed)
+    assert all(None not in ks[1:] for ks in keyed)
     for unique_right in (True, False):
         flat = triple_over_join(left, right, unique_right=unique_right, flat_entries=True, **kwargs)
         assert Counter(tuple(r) for r in flat.collect()) == exp_flat, unique_right

@@ -643,6 +643,9 @@ def test_repetition_metrics_crafted(spark):
         (4, ""),  # empty -> all zeros
         (5, None),  # NULL == empty
         (6, "single"),  # < n tokens -> no grams
+        # trim strips spaces only: an outer newline or tab makes no word
+        (7, "\n"),
+        (8, "\tsingle\n"),
     ]
     df = spark.createDataFrame(rows, "id int, text string")
     got = {
@@ -655,6 +658,8 @@ def test_repetition_metrics_crafted(spark):
     assert got[4] == (0.0, 0.0, 0.0)
     assert got[5] == (0.0, 0.0, 0.0)
     assert got[6] == (0.0, 0.0, 0.0)
+    assert got[7] == (0.0, 0.0, 0.0)
+    assert got[8] == (0.0, 0.0, 0.0)
 
 
 def test_encode_with_vocabulary_edges(spark):

@@ -1,16 +1,13 @@
 """Randomized (seeded) equivalence: the distributed aggregation must match
-the pure-Python driver algebra on arbitrary data, for every strategy and
-shape — the cross-implementation safety net behind the golden fixtures."""
+the pure-Python driver algebra on arbitrary data, for every shape — the
+cross-implementation safety net behind the golden fixtures."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from duckdb_imputation_spark.functions.triple import Triple
-from duckdb_imputation_spark.operators.cofactor import (
-    _sum_to_triple_collect,
-    sum_to_triple,
-)
+from duckdb_imputation_spark.operators.cofactor import sum_to_triple
 from duckdb_imputation_spark.operators.flatten import triple_entries
 
 RNG = np.random.default_rng(123)
@@ -53,33 +50,30 @@ def close(a: Triple, b: Triple):
             assert abs(m1[k] - m2[k]) < 1e-6 + 1e-9 * abs(m1[k])
 
 
+_SHAPES = [(1, 1, False), (3, 2, False), (2, 3, True), (4, 0, False), (0, 2, False), (8, 4, False)]
+
+
 # (8, 4): fan-out × quads = 14 × 36 > _FUSE_DENSE_MAX, the two-scan union
-# shape; (4, 0) is the dense aggregate alone, the rest the fused single scan
+# shape; (4, 0) is the dense aggregate alone, the rest the fused single
+# scan.  The ids keep the "twolevel-" prefix they had while a second
+# builder was compared here, so the test ids stay stable.
 @pytest.mark.parametrize(
-    "d,c,nb",
-    [(1, 1, False), (3, 2, False), (2, 3, True), (4, 0, False), (0, 2, False), (8, 4, False)],
+    "d,c,nb", _SHAPES, ids=[f"twolevel-{d}-{c}-{nb}" for d, c, nb in _SHAPES]
 )
-@pytest.mark.parametrize("strategy", ["twolevel", "collect"])
-def test_spark_agg_equals_python_algebra(spark, d, c, nb, strategy):
-    if strategy == "collect" and c == 0:
-        pytest.skip("the collect builder is only used when cats exist")
+def test_spark_agg_equals_python_algebra(spark, d, c, nb):
     df, rows = random_frame(spark, n=150, d=d, c=c)
     num = [f"x{i}" for i in range(d)]
     cat = [f"k{j}" for j in range(c)]
-    build = _sum_to_triple_collect if strategy == "collect" else sum_to_triple
-    out = build(df, num, cat, group_by=["g"], nb=nb)
+    out = sum_to_triple(df, num, cat, group_by=["g"], nb=nb)
     got = {r["g"]: Triple.from_row(r["triple"], d_num=d, d_cat=c) for r in out.collect()}
     for g in got:
         close(got[g], python_agg(rows, d, c, group=g, nb=nb))
-    if strategy == "twolevel":
-        # the flat entry rows, folded on the driver, give the same triples
-        entries = triple_entries(df, num, cat, group_by=["g"], nb=nb).collect()
-        assert {r["g"] for r in entries} == set(got)
-        for g in got:
-            folded = Triple.from_entries(
-                [r for r in entries if r["g"] == g], d, c, nb=nb
-            )
-            close(folded, python_agg(rows, d, c, group=g, nb=nb))
+    # the flat entry rows, folded on the driver, give the same triples
+    entries = triple_entries(df, num, cat, group_by=["g"], nb=nb).collect()
+    assert {r["g"] for r in entries} == set(got)
+    for g in got:
+        folded = Triple.from_entries([r for r in entries if r["g"] == g], d, c, nb=nb)
+        close(folded, python_agg(rows, d, c, group=g, nb=nb))
 
 
 def test_max_categories_guard(spark):
